@@ -35,17 +35,14 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from river_spark.ingest.layout import data_parts
+
 _JOURNAL_PREFIX = "_compact_journal_"
 
 
 def _parts(out_dir: str) -> list[tuple[str, int]]:
     """Sorted [(file name, size bytes)] of the directory's data parts."""
-    names = sorted(
-        f
-        for f in os.listdir(out_dir)
-        if f.startswith("data_") and f.endswith(".parquet")
-    )
-    return [(n, os.path.getsize(os.path.join(out_dir, n))) for n in names]
+    return [(n, os.path.getsize(os.path.join(out_dir, n))) for n in data_parts(out_dir)]
 
 
 def plan_compaction(parts: list[tuple[str, int]], target_bytes: int) -> list[list[str]]:

@@ -27,18 +27,21 @@ _rebuild_locks: defaultdict[str, threading.Lock] = defaultdict(threading.Lock)
 _rebuild_locks_guard = threading.Lock()
 
 
+def data_parts(stream_dir: str) -> list[str]:
+    """File names of the directory's ``data_*.parquet`` parts in name order
+    (names are zero-padded, so lexicographic == ingest order)."""
+    return sorted(
+        f for f in os.listdir(stream_dir) if f.startswith("data_") and f.endswith(".parquet")
+    )
+
+
 def data_files(stream_dir: str) -> list[str]:
     """The stream's data files: the monolithic file if present, else the
-    size-tiered parts in name order (names are zero-padded, so
-    lexicographic == ingest order)."""
+    size-tiered parts in ingest order."""
     final = os.path.join(stream_dir, "data.parquet")
     if os.path.exists(final):
         return [final]
-    return [
-        os.path.join(stream_dir, f)
-        for f in sorted(os.listdir(stream_dir))
-        if f.startswith("data_") and f.endswith(".parquet")
-    ]
+    return [os.path.join(stream_dir, f) for f in data_parts(stream_dir)]
 
 
 def data_glob(stream_dir: str) -> str:

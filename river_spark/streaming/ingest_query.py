@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from river_spark.ingest.ingester import write_output_metadata
 from river_spark.ingest.settings import IngesterSettings, StreamIngestionSettings
 from river_spark.schema import StreamSchema
 from river_spark.sources import register
@@ -117,33 +118,7 @@ def ingest_streams(
     if await_termination:
         for name, q in queries.items():
             q.awaitTermination()
-            write_output_metadata(log_root, name, out_root, settings.settings_for(name))
+            write_output_metadata(
+                log, name, os.path.join(out_root, name), settings.settings_for(name)
+            )
     return queries
-
-
-def write_output_metadata(
-    log_root: str, stream: str, out_root: str, settings: StreamIngestionSettings | None = None
-) -> None:
-    """Emit out/{stream}/metadata.json from the live stream metadata."""
-    import json
-
-    log = open_log_root(log_root)
-    meta = log.read_metadata(stream) or {}
-    schema_json = meta.get("schema")
-    fields = None
-    if schema_json is not None:
-        schema = StreamSchema.from_json(schema_json)
-        fields = (settings or StreamIngestionSettings()).filter_fields(schema.field_names())
-    out_dir = os.path.join(out_root, stream)
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "metadata.json"), "w") as f:
-        json.dump(
-            {
-                "stream_name": stream,
-                "schema": schema_json,
-                "initialized_at_us": meta.get("initialized_at_us"),
-                "user_metadata": meta.get("user_metadata", {}),
-                "columns": fields,
-            },
-            f,
-        )

@@ -82,6 +82,16 @@ class StorageBackend(abc.ABC):
     @abc.abstractmethod
     def delete_batch(self, handle: str) -> None: ...
 
+    def last_batch_info(self, name: str, segment_idx: int) -> tuple[int, int, int] | None:
+        """(end index, last key ms, last key seq) of the newest batch in one
+        segment, None if it holds no data. Backends with a cheaper tail
+        probe than a full listing override this."""
+        batches = self.list_batches(name, segment_idx)
+        if not batches:
+            return None
+        start, n, key_ms, key_seq0, _handle = batches[-1]
+        return start + n, key_ms, key_seq0 + n - 1
+
     # ---- segments + control markers ---------------------------------------
     @abc.abstractmethod
     def write_tombstone(self, name: str, segment_idx: int, sample_index: int) -> None: ...

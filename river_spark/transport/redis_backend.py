@@ -581,11 +581,10 @@ class RedisBackend(StorageBackend):
         self._conn().command("SET", f"river-aux-{key}", str(value))
 
     def last_batch_info(self, name: str, segment_idx: int) -> tuple[int, int, int] | None:
-        """(next_sample_index, last_key_ms, last_key_seq) of the newest
-        DATA entry in one segment, from a tail XREVRANGE — the O(1) probe
-        a per-micro-batch sink commit uses instead of XRANGE-ing the whole
-        stream to recover its append position. None if the segment holds
-        no data (control markers are skipped)."""
+        """(end index, last key ms, last key seq) of the newest DATA entry
+        in one segment, from a tail XREVRANGE — O(1) per segment where the
+        listing would XRANGE every entry. None if the segment holds no
+        data (control markers are skipped)."""
         entries = self._conn().command(
             "XREVRANGE", self._seg_key(name, segment_idx), "+", "-", "COUNT", 8
         )
@@ -601,44 +600,6 @@ class RedisBackend(StorageBackend):
                 ms, seq = _id_tuple(raw_id)
                 return int(f[b"i"]) + 1, ms, seq
         return None
-
-    def split_handle(self, handle: str, max_n: int) -> list[str]:
-        """Split a per-sample-entry handle into <= max_n-sample slices so a
-        promote can read a partition-sized run in bounded pieces (one
-        giant unpaginated XRANGE reply would hold the whole partition in
-        memory). Framed handles (either layout) are indivisible and
-        return as-is."""
-        name, seg, kind, start, n, first_id, last_id = self._parse_handle(handle)
-        if kind in ("framed", "modframed") or n <= max_n:
-            return [handle]
-        ms, seq0 = (int(x) for x in first_id.split("-"))
-        out = []
-        for lo in range(0, n, max_n):
-            take = min(max_n, n - lo)
-            out.append(
-                f"{_HANDLE_PREFIX}{name}/{seg}/{kind}/{start + lo}/{take}/"
-                f"{ms}-{seq0 + lo}/{ms}-{seq0 + lo + take - 1}"
-            )
-        return out
-
-    def last_index(self, name: str, segment_idx: int) -> int:
-        """Highest sample index + 1 present in one segment, from the TAIL
-        of the stream key only (XREVRANGE COUNT k): every entry kind
-        carries enough to answer — ``i``(+``n``) on data entries,
-        ``sample_index`` on control markers — so a live poller pays O(1)
-        per segment instead of an O(entries) XRANGE scan."""
-        entries = self._conn().command(
-            "XREVRANGE", self._seg_key(name, segment_idx), "+", "-", "COUNT", 8
-        )
-        for _raw_id, flat in entries:
-            f = _fields_dict(flat)
-            if b"batch_val" in f:
-                return int(f[b"i"]) + int(f[b"n"])
-            if b"val" in f or b"reference" in f:
-                return int(f[b"i"]) + 1
-            if b"sample_index" in f:  # tombstone/EOF marker
-                return int(f[b"sample_index"]) + 1
-        return 0
 
     # ---- blocking wait (≈ XREAD BLOCK, cpp/src/redis.cpp:63-84) ------------
     def wait_for_append(self, name: str, segment_idx: int, timeout_ms: int = 50) -> None:

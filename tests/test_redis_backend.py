@@ -400,6 +400,48 @@ def test_streaming_ingester_drains_redis_to_parquet(spark, server, backend, tmp_
     assert set(out.columns) >= {"sample_index", "key", "timestamp_ms", "a", "b"}
 
 
+@pytest.mark.parametrize("batch_framing", [False, True])
+def test_spark_sink_segment_boundary_split_over_redis(spark, server, backend, batch_framing):
+    """The sink over the redis locator splits a staged chunk that spans a
+    segment boundary, with tombstone rollover and a dense sample_index,
+    both for per-sample entries and under batchFraming."""
+    from pyspark.sql import functions as F
+
+    from river_spark.sources import register
+
+    register(spark)
+    host, port = server
+    df = spark.range(0, 450).select(F.col("id").alias("a"), (F.col("id") * 1.0).alias("b"))
+    (
+        df.coalesce(1)
+        .write.format("river")
+        .option("redis", f"{host}:{port}")
+        .option("stream", "rsplit")
+        .option("batchFraming", str(batch_framing).lower())
+        .option("batchSize", "64")
+        .option("entriesPerSegment", "100")
+        .mode("append")
+        .save()
+    )
+    log = StreamLog(backend=RedisBackend(host, port))
+    assert [n for n in log.list_streams() if n.startswith("_stg_")] == []
+    segs = log.list_segments("rsplit")
+    assert segs == [0, 1, 2, 3, 4]
+    for seg in segs[:-1]:
+        ctrl = log.read_control("rsplit", seg)
+        assert ctrl is not None and ctrl.get("tombstone") == 1
+        assert ctrl["sample_index"] == 100 * seg + 99
+    back = (
+        spark.read.format("river")
+        .option("redis", f"{host}:{port}")
+        .option("stream", "rsplit")
+        .load()
+    )
+    rows = back.orderBy("sample_index").collect()
+    assert [r.sample_index for r in rows] == list(range(450))
+    assert [r.a for r in rows] == list(range(450))
+
+
 def test_last_index_tail_probe_matches_full_scan(server, backend):
     """The O(1) tail probe must agree with the full batch listing for
     every segment shape: data tail, tombstone tail, EOF tail, and
@@ -417,13 +459,10 @@ def test_last_index_tail_probe_matches_full_scan(server, backend):
 
     for name in ("probe", "probe_c"):
         for seg in log.list_segments(name):
-            full = max(
-                (s + c for s, c, _m, _q, _h in log.list_batches(name, seg)), default=0
-            )
-            probe = backend.last_index(name, seg)
-            # control markers may push the probe to the segment's true end
-            # even when the last batch listing stops earlier; both views
-            # must agree here because markers trail the data they describe
+            start, cnt, ms, seq0, _h = log.list_batches(name, seg)[-1]
+            full = (start + cnt, ms, seq0 + cnt - 1)
+            # the tail probe skips the control markers that trail the data
+            probe = backend.last_batch_info(name, seg)
             assert probe == full, (name, seg, probe, full)
 
 
@@ -713,7 +752,7 @@ def test_module_compressed_rollover_and_tail_probes(server):
     """Module-framed compressed batches interleaved with segment
     rollover: tombstones sit between blob/reference chains, the reader
     follows every transition bit-exactly, and the O(1) tail probes
-    (last_index / last_batch_info) understand reference entries."""
+    (last_batch_info) understand reference entries."""
     from river_spark.transport.compression import CompressionMode, Compressor
 
     host, port = server
@@ -742,7 +781,6 @@ def test_module_compressed_rollover_and_tail_probes(server):
     np.testing.assert_array_equal(res.samples["x"], arr["x"])
     assert transitions == [(0, 1), (1, 2), (2, 3), (3, 4)]
     # tail probes must parse reference entries (64 samples per segment)
-    assert b.last_index("mod_roll", 0) == 64
     info = b.last_batch_info("mod_roll", 0)
     assert info is not None and info[0] == 64
 

@@ -244,31 +244,6 @@ def test_sink_append_respects_stream_segment_geometry(spark, tmp_path):
         )
 
 
-def test_split_handle_slices_per_sample_runs(tmp_path):
-    from river_spark.testing import MiniRedisServer
-    from river_spark.transport import RedisBackend
-
-    with MiniRedisServer() as (host, port):
-        b = RedisBackend(host, port)
-        log = StreamLog(backend=b)
-        schema = StreamSchema([FieldDefinition("v", FieldType.DOUBLE)])
-        w = StreamWriter(log).initialize("sh", schema)
-        arr = np.zeros(10, dtype=schema.dtype())
-        arr["v"] = np.arange(10.0)
-        w.write(arr)
-        (start, n, _ms, _seq, handle), *_ = log.list_batches("sh", 0)
-        assert (start, n) == (0, 10)
-        subs = b.split_handle(handle, 4)
-        assert len(subs) == 3  # 4 + 4 + 2
-        got = []
-        for h, take in zip(subs, (4, 4, 2)):
-            z = b.read_batch(h)
-            vals = np.frombuffer(bytes(z["data"]), dtype=np.float64)
-            assert len(vals) == take
-            got.extend(vals.tolist())
-        assert got == list(np.arange(10.0))
-
-
 def test_union_then_smj_executes(spark):
     """Spark 4.1 repro pinned: with spark.sql.unionOutputPartitioning on
     (the 4.1 default), a union of two hash-partitioned children reports

@@ -316,10 +316,33 @@ def test_sink_commit_is_rename_only(spark, store, monkeypatch):
     assert back.agg(F.sum("a")).collect()[0][0] == 5000 * 4999 // 2
 
 
+def _assert_split_stream(spark, log, locator, stream, n=450):
+    """n samples at 100 per segment: segments 0..4, a tombstone ending
+    every one but the last, and a dense sample_index."""
+    segs = log.list_segments(stream)
+    assert segs == [0, 1, 2, 3, 4]
+    for seg in segs[:-1]:
+        ctrl = log.read_control(stream, seg)
+        assert ctrl is not None and ctrl.get("tombstone") == 1
+        assert ctrl["sample_index"] == 100 * seg + 99
+    assert log.read_control(stream, segs[-1]) is None
+    reader = spark.read.format("river").option("stream", stream)
+    for k, v in locator.items():
+        reader = reader.option(k, v)
+    back = reader.load()
+    assert back.count() == n
+    idx = sorted(r.sample_index for r in back.select("sample_index").collect())
+    assert idx == list(range(n))
+    return back
+
+
 def test_sink_segment_boundary_split(spark, store):
     """A staged chunk that would span a segment boundary is split, with
-    tombstone rollover, preserving dense sample_index."""
+    tombstone rollover, preserving dense sample_index — for a new stream,
+    a compressed stream the sink appends to, and a variable-width
+    stream."""
     register(spark)
+    log = StreamLog(store)
     df = spark.range(0, 450).select(F.col("id").alias("a"), (F.col("id") * 1.0).alias("b"))
     (
         df.coalesce(1)
@@ -331,17 +354,44 @@ def test_sink_segment_boundary_split(spark, store):
         .mode("append")
         .save()
     )
-    log = StreamLog(store)
-    segs = log.list_segments("split")
-    assert len(segs) >= 4  # 450 samples / 100 per segment
-    for seg in segs[:-1]:
-        ctrl = log.read_control("split", seg)
-        assert ctrl is not None and ctrl.get("tombstone") == 1
-    back = spark.read.format("river").option("path", store).option("stream", "split").load()
-    assert back.count() == 450
-    idx = sorted(r.sample_index for r in back.select("sample_index").collect())
-    assert idx == list(range(450))
+    back = _assert_split_stream(spark, log, {"path": store}, "split")
     assert back.agg(F.sum("a")).collect()[0][0] == 450 * 449 // 2
+
+    # compressed stream made by StreamWriter; the sink inherits its
+    # geometry and compressor, and its single 450-row chunk spans five
+    # segments
+    from river_spark.transport.compression import CompressionMode, Compressor
+
+    schema = StreamSchema(
+        [FieldDefinition("a", FieldType.INT64), FieldDefinition("b", FieldType.DOUBLE)]
+    )
+    StreamWriter(
+        log, entries_per_segment=100, compression=Compressor(CompressionMode.ZLIB_LOSSLESS)
+    ).initialize("split_z", schema)
+    df.coalesce(1).write.format("river").option("path", store).option(
+        "stream", "split_z"
+    ).mode("append").save()
+    back = _assert_split_stream(spark, log, {"path": store}, "split_z")
+    rows = back.orderBy("sample_index").collect()
+    assert [r.a for r in rows] == list(range(450))
+    assert [r.b for r in rows] == [float(i) for i in range(450)]
+
+    vw = spark.range(0, 450).select(
+        F.encode(F.concat(F.lit("doc-"), F.col("id").cast("string")), "utf-8").alias("payload")
+    )
+    (
+        vw.coalesce(1)
+        .write.format("river")
+        .option("path", store)
+        .option("stream", "split_vw")
+        .option("batchSize", "64")
+        .option("entriesPerSegment", "100")
+        .mode("append")
+        .save()
+    )
+    back = _assert_split_stream(spark, log, {"path": store}, "split_vw")
+    rows = back.orderBy("sample_index").collect()
+    assert [bytes(r.payload).decode() for r in rows] == [f"doc-{i}" for i in range(450)]
 
 
 def test_streaming_restart_backlog_capped(spark, store, tmp_path):
@@ -506,3 +556,43 @@ def test_foreign_cursor_inverted_window_yields_empty_batch(store):
     assert list(r.read(None)) == []
     # and the cap base self-advances: the inverted window cannot recur
     assert r.latestOffset()["index"] >= 900
+
+
+def test_fixed_width_bytes_output_types(spark, store, tmp_path):
+    """FIXED_WIDTH_BYTES keeps its width in the ingester's Parquet
+    (fixed_size_binary[4]) and reads back as Spark's BinaryType from the
+    DataSource, with the same bytes in both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from river_spark.ingest.ingester import StreamIngester
+    from river_spark.ingest.layout import data_files
+
+    schema = StreamSchema(
+        [
+            FieldDefinition("tag", FieldType.FIXED_WIDTH_BYTES, size=4),
+            FieldDefinition("v", FieldType.INT32),
+        ]
+    )
+    tags = [b"t%03d" % i for i in range(40)]
+    log = StreamLog(store)
+    w = StreamWriter(log, batch_size=16).initialize("fwb", schema)
+    arr = np.zeros(40, dtype=schema.dtype())
+    arr["tag"] = tags
+    arr["v"] = np.arange(40)
+    w.write(arr)
+    w.stop()
+
+    register(spark)
+    df = spark.read.format("river").option("path", store).option("stream", "fwb").load()
+    assert df.schema["tag"].dataType == T.BinaryType()
+    assert [bytes(r.tag) for r in df.orderBy("sample_index").collect()] == tags
+
+    out = str(tmp_path / "out")
+    ingester = StreamIngester(log, out)
+    ingester.ingest()
+    ingester.wait_all()
+    table = pa.concat_tables(pq.read_table(f) for f in data_files(os.path.join(out, "fwb")))
+    assert table.schema.field("tag").type == pa.binary(4)
+    assert table.column("tag").to_pylist() == tags
