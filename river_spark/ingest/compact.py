@@ -36,6 +36,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from river_spark.ingest.layout import data_parts
+from river_spark.ingest.parquet import write_parquet
 
 _JOURNAL_PREFIX = "_compact_journal_"
 
@@ -127,16 +128,22 @@ def _compact_group(out_dir: str, group: list[str]) -> int:
     Returns bytes written."""
     target = group[-1]
     absorbed = group[:-1]
-    tables = [pq.read_table(os.path.join(out_dir, n)) for n in group]
-    merged = pa.concat_tables(tables)
-    tmp = os.path.join(out_dir, target + ".compact.tmp")
-    pq.write_table(merged, tmp, compression="snappy")
-    # journal BEFORE the switch: from here a crash is always recoverable
+    merged = pa.concat_tables([pq.read_table(os.path.join(out_dir, n)) for n in group])
     jpath = os.path.join(out_dir, f"{_JOURNAL_PREFIX}{target}.json")
-    with open(jpath + ".tmp", "w") as f:
-        json.dump({"target": target, "absorbed": absorbed}, f)
-    os.replace(jpath + ".tmp", jpath)
-    os.replace(tmp, os.path.join(out_dir, target))  # the atomic switch
+
+    def journal():
+        # journal BEFORE the switch: from here a crash is always recoverable
+        with open(jpath + ".tmp", "w") as f:
+            json.dump({"target": target, "absorbed": absorbed}, f)
+        os.replace(jpath + ".tmp", jpath)
+
+    # the rename onto target is the atomic switch
+    write_parquet(
+        os.path.join(out_dir, target),
+        merged,
+        tmp=os.path.join(out_dir, target + ".compact.tmp"),
+        before_rename=journal,
+    )
     for name in absorbed:
         os.unlink(os.path.join(out_dir, name))
     os.unlink(jpath)

@@ -18,6 +18,8 @@ from collections import defaultdict
 
 import pyarrow.parquet as pq
 
+from river_spark.ingest.parquet import write_parquet
+
 # servable_file is called from ThreadingHTTPServer handlers: without
 # serialization, two concurrent GETs of a stale tiered stream would race
 # rebuilding the merge cache. A per-stream lock makes the rebuild
@@ -77,28 +79,15 @@ def servable_file(stream_dir: str) -> str | None:
             return cache
         fd, tmp = tempfile.mkstemp(dir=stream_dir, prefix=".data.http.", suffix=".tmp")
         os.close(fd)
-        writer = None
-        try:
+
+        def row_groups():
             for p in files:
                 pf = pq.ParquetFile(p)
                 for i in range(pf.metadata.num_row_groups):
-                    t = pf.read_row_group(i)
-                    if writer is None:
-                        writer = pq.ParquetWriter(tmp, t.schema, compression="snappy")
-                    writer.write_table(t)
-            if writer is None:
-                # zero row groups across all parts: emit a valid empty
-                # parquet with the first part's schema
-                writer = pq.ParquetWriter(
-                    tmp, pq.ParquetFile(files[0]).schema_arrow, compression="snappy"
-                )
-            writer.close()
-            writer = None
-            os.replace(tmp, cache)
-        except BaseException:
-            if writer is not None:
-                writer.close()
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+                    yield pf.read_row_group(i)
+
+        # zero row groups across all parts still gives a valid empty
+        # parquet with the first part's schema
+        schema = pq.ParquetFile(files[0]).schema_arrow
+        write_parquet(cache, row_groups(), schema=schema, tmp=tmp)
     return cache

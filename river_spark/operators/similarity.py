@@ -164,7 +164,9 @@ def lsh_signature_sql(vec_col: str, n_planes: int = 12, weights=None) -> str:
             f"'lsh_signature: vector dim != weight dim {dim} (got ', "
             f"cast(size({vec_col}) as string), ')')) as int) ELSE 0 END"
         )
-        js = _json.dumps([[float(x) for x in row] for row in weights])
+        # allow_nan=False: a NaN/inf weight raises here instead of
+        # emitting a NaN literal whose comparison silently sets a bit
+        js = _json.dumps([[float(x) for x in row] for row in weights], allow_nan=False)
         fold = (
             f"aggregate(transform(sequence(0, {n_planes - 1}), p -> "
             f"IF(aggregate(zip_with({vec_col}, "

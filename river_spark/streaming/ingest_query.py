@@ -9,6 +9,8 @@ Mapping (SURVEY.md §7 Phase 4, reference cpp/ingester/src/):
   protocol (_spark_metadata);
 - 1 s driver cadence (ingester_main.cpp:96-99)  → processingTime trigger;
 - row-group sizing (ingester_settings.h:20)     → maxRecordsPerFile;
+- Parquet dictionary rule (ingest/parquet.py)   → per-column
+  ``parquet.enable.dictionary#<column>`` settings when the query starts;
 - column pruning (A18)                          → ``select`` projection from
   the same settings object (Catalyst prunes the scan);
 - retention (A16)                               → source ``commit()`` with
@@ -24,11 +26,13 @@ reproduce only in the batch ingester.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
 
-from river_spark.ingest.ingester import write_output_metadata
+from river_spark.ingest.ingester import arrow_schema, write_output_metadata
+from river_spark.ingest.parquet import dictionary_columns
 from river_spark.ingest.settings import IngesterSettings, StreamIngestionSettings
 from river_spark.schema import StreamSchema
 from river_spark.sources import register
@@ -91,7 +95,35 @@ def ingest_stream_continuous(
         writer = writer.partitionBy("date")
     trigger = trigger or {"availableNow": True}
     writer = writer.trigger(**trigger)
-    return writer.start()
+    with _parquet_dictionary_rule(spark, arrow_schema(schema, fields)):
+        return writer.start()
+
+
+@contextlib.contextmanager
+def _parquet_dictionary_rule(spark: SparkSession, schema):
+    """Spark's Parquet writer under the dictionary rule of
+    ``ingest/parquet.py``: a session setting
+    ``parquet.enable.dictionary#<column>=false`` per column the rule
+    excludes, for the block only. Spark copies session settings into the
+    Hadoop configuration of a file sink when the sink is created, which for
+    a streaming query is at ``start()`` (another Parquet writer the session
+    creates meanwhile sees the settings too). Without them each task's
+    writer holds a dictionary of every distinct double until its file
+    closes: tens of MB of JVM heap per task, which outlive young
+    collections and are promoted."""
+    excluded = set(schema.names) - set(dictionary_columns(schema))
+    keys = [f"parquet.enable.dictionary#{name}" for name in sorted(excluded)]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "false")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def ingest_streams(

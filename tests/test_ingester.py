@@ -211,3 +211,82 @@ def test_finalize_tiered_above_single_file_threshold(log, out):
     assert t.num_rows == 500
     np.testing.assert_array_equal(t.column("sample_index").to_numpy(), np.arange(500))
     assert os.path.exists(os.path.join(d, "metadata.json"))
+
+
+def test_parquet_dictionary_only_where_it_pays(log, out):
+    """Ingested Parquet writes float columns, ``key`` and ``sample_index``
+    without a dictionary page, keeps one on the integer fields and
+    ``timestamp_ms``, and the values are unchanged."""
+    _, arr = write_stream(log, "dict", n=300)
+    res = SingleStreamIngester(log, out, "dict", default_settings()).ingest()
+    assert res is IngestResult.COMPLETED
+    path = os.path.join(out, "dict", "data.parquet")
+    md = pq.ParquetFile(path).metadata
+    has_dict = {
+        md.row_group(0).column(i).path_in_schema: md.row_group(0).column(i).has_dictionary_page
+        for i in range(md.num_columns)
+    }
+    assert has_dict == {
+        "sample_index": False,
+        "key": False,
+        "timestamp_ms": True,
+        "d": False,
+        "i32": True,
+        "i64": True,
+    }
+    assert all(
+        "RLE_DICTIONARY" not in md.row_group(0).column(i).encodings
+        for i in range(md.num_columns)
+        if not has_dict[md.row_group(0).column(i).path_in_schema]
+    )
+    t = pq.read_table(path)
+    for name in ("d", "i32", "i64"):
+        np.testing.assert_array_equal(t.column(name).to_numpy(), arr[name])
+    np.testing.assert_array_equal(t.column("sample_index").to_numpy(), np.arange(300))
+
+
+def test_finalize_renames_lone_part(log, out, monkeypatch):
+    """One part becomes ``data.parquet`` by rename (no read-back, no
+    rewrite) and is then the only data file; several parts still
+    concatenate."""
+    import river_spark.ingest.ingester as ingester_mod
+
+    write_stream(log, "lone", n=100)
+    writes = []
+    real = ingester_mod.write_parquet
+
+    def spy(path, *args, **kwargs):
+        writes.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(ingester_mod, "write_parquet", spy)
+    res = SingleStreamIngester(log, out, "lone", default_settings()).ingest()
+    assert res is IngestResult.COMPLETED
+    d = os.path.join(out, "lone")
+    assert [os.path.basename(p) for p in writes] == ["data_0000000000.parquet"]
+    assert sorted(f for f in os.listdir(d) if f.endswith(".parquet")) == ["data.parquet"]
+    assert pq.read_table(os.path.join(d, "data.parquet")).num_rows == 100
+
+    writes.clear()
+    write_stream(log, "many", n=250)
+    s = default_settings(bytes_per_row_group=100 * multi_schema().sample_size())
+    assert SingleStreamIngester(log, out, "many", s).ingest() is IngestResult.COMPLETED
+    d = os.path.join(out, "many")
+    assert [os.path.basename(p) for p in writes][-1] == "data.parquet" and len(writes) == 4
+    assert sorted(f for f in os.listdir(d) if f.endswith(".parquet")) == ["data.parquet"]
+    t = pq.read_table(os.path.join(d, "data.parquet"))
+    np.testing.assert_array_equal(t.column("sample_index").to_numpy(), np.arange(250))
+
+
+def test_write_parquet_failed_write_leaves_no_temp(tmp_path):
+    """A write that fails removes its temp and leaves the target absent."""
+    import pyarrow as pa
+
+    from river_spark.ingest.parquet import write_parquet
+
+    target = str(tmp_path / "data.parquet")
+    schema = pa.schema([pa.field("x", pa.float64())])
+    bad = pa.table({"y": pa.array([1], pa.int64())})  # not of ``schema``
+    with pytest.raises(ValueError):
+        write_parquet(target, iter([bad]), schema=schema)
+    assert os.listdir(tmp_path) == []

@@ -945,3 +945,29 @@ def test_delete_segment_invalidates_scan_state(server, backend):
     )
     gen2 = log.list_batches("regen", 0)
     assert [(s, c) for s, c, _m, _q, _h in gen2] == [(0, 2)]
+
+
+def test_spark_batch_read_packs_redis_batches(spark, server, backend):
+    """Over the redis locator too, a batch read packs the stream's 33
+    stored batches into at most one split per planning core (one
+    connection per task) and returns every sample once, in order."""
+    from river_spark.sources import register
+    from river_spark.sources import river_source
+    from river_spark.sources.river_source import RiverBatchReader
+
+    log = StreamLog(backend=backend)
+    _schema_, arr = _write(log, "packed", n=33 * 40, batch_size=40)
+    assert sum(len(log.list_batches("packed", s)) for s in log.list_segments("packed")) == 33
+    host, port = server
+    url = f"{host}:{port}"
+    parts = RiverBatchReader({"redis": url, "stream": "packed"}).partitions()
+    assert 1 <= len(parts) <= river_source._planning_cores()
+    assert [s[1] + s[4] for p in parts for s in p.slices] == [40 * i for i in range(33)]
+    register(spark)
+    rows = (
+        spark.read.format("river").option("redis", url).option("stream", "packed").load()
+        .orderBy("sample_index").select("sample_index", "a", "b").collect()
+    )
+    assert [r.sample_index for r in rows] == list(range(len(arr)))
+    assert [r.a for r in rows] == arr["a"].tolist()
+    assert [r.b for r in rows] == arr["b"].tolist()

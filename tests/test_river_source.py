@@ -420,6 +420,9 @@ def test_streaming_restart_backlog_capped(spark, store, tmp_path):
 
     run()
     assert spark.read.parquet(out).count() == 100
+    # the first (availableNow) run had no cursor, so it took the whole
+    # 100-row backlog uncapped; only the restarted query is capped
+    before = {os.path.basename(f) for f in spark.read.parquet(out).inputFiles()}
     # big backlog lands while the query is down
     schema = StreamSchema(
         [FieldDefinition("a", FieldType.INT64), FieldDefinition("b", FieldType.DOUBLE)]
@@ -449,16 +452,19 @@ def test_streaming_restart_backlog_capped(spark, store, tmp_path):
         if spark.read.parquet(out).count() >= 1100:
             break
         time.sleep(0.5)
+    progress = q.recentProgress
     q.stop()
     df = spark.read.parquet(out)
     assert df.count() == 1100
     assert df.select("sample_index").distinct().count() == 1100
-    # every micro-batch (parquet commit) stayed within the cap — including
-    # the FIRST one after the restart, which sees the full 1000-row backlog
+    # every micro-batch of the restarted query stayed within the cap —
+    # including the FIRST one, which sees the full 1000-row backlog
+    assert progress and max(p["numInputRows"] for p in progress) <= 75
     from pyspark.sql import functions as F2
 
-    per_file = df.groupBy(F2.input_file_name()).count().collect()
-    assert max(r["count"] for r in per_file) <= 75
+    per_file = df.groupBy(F2.input_file_name().alias("f")).count().collect()
+    after = [r["count"] for r in per_file if os.path.basename(r["f"]) not in before]
+    assert after and max(after) <= 75
 
 
 def test_sink_duplicate_attempt_cannot_clobber_staged_chunk(spark, store, monkeypatch):
@@ -596,3 +602,132 @@ def test_fixed_width_bytes_output_types(spark, store, tmp_path):
     table = pa.concat_tables(pq.read_table(f) for f in data_files(os.path.join(out, "fwb")))
     assert table.schema.field("tag").type == pa.binary(4)
     assert table.column("tag").to_pylist() == tags
+
+
+# -- packing: batch-file slices into core-sized splits ---------------------------
+def _wide_stream(store, name, n_files=33, per_file=64):
+    """``n_files`` batch files of 4 KiB samples (an int64 ``a`` plus 4,088
+    pad bytes), big enough for the split rule to cut files."""
+    log = StreamLog(store)
+    schema = StreamSchema(
+        [
+            FieldDefinition("a", FieldType.INT64),
+            FieldDefinition("pad", FieldType.FIXED_WIDTH_BYTES, size=4088),
+        ]
+    )
+    w = StreamWriter(log, batch_size=per_file).initialize(name, schema)
+    arr = np.zeros(n_files * per_file, dtype=schema.dtype())
+    arr["a"] = np.arange(len(arr))
+    w.write(arr)
+    w.stop()
+    return log
+
+
+@pytest.mark.parametrize("cores", [1, 2, 3, 8, None])
+def test_stream_partitions_pack_contiguous_slices(store, monkeypatch, cores):
+    """A mid-file [start, end) over 33 batch files packs into at most
+    ``cores`` partitions whose slices cover every sample exactly once, in
+    order, with the right lo/hi at both edges."""
+    from river_spark.sources import river_source
+    from river_spark.sources.river_source import RiverStreamReader
+
+    if cores is not None:
+        monkeypatch.setattr(river_source, "_planning_cores", lambda: cores)
+    log = _wide_stream(store, "pk")
+    batches = {b[4]: b for s in log.list_segments("pk") for b in log.list_batches("pk", s)}
+    assert len(batches) == 33
+    start, end = 10, 33 * 64 - 7
+    r = RiverStreamReader({"path": store, "stream": "pk"})
+    parts = r.partitions({"index": start}, {"index": end})
+    assert 1 <= len(parts) <= river_source._planning_cores()
+
+    slices = [s for p in parts for s in p.slices]
+    assert all(p.slices for p in parts)
+    nxt = start
+    for path, bstart, ms, seq0, lo, hi in slices:
+        assert (bstart, ms, seq0) == (batches[path][0], batches[path][2], batches[path][3])
+        assert 0 <= lo < hi <= batches[path][1]
+        assert bstart + lo == nxt  # contiguous, no sample twice
+        nxt = bstart + hi
+    assert nxt == end
+    assert (slices[0][4], slices[-1][5]) == (10, 64 - 7)  # mid-file edges
+    got = np.concatenate([b.column("a").to_numpy() for p in parts for b in r.read(p)])
+    np.testing.assert_array_equal(got, np.arange(start, end))
+
+
+def _reader_rows(store, name):
+    """(sample_index, key, value bytes) rows straight from the transport."""
+    from river_spark.transport import StreamReader
+
+    res = StreamReader(StreamLog(store)).initialize(name).read(100_000, with_keys=True)
+    if res.sizes is None:
+        values = res.samples["v"].tolist()
+    else:
+        offs = np.concatenate([[0], np.cumsum(res.sizes)])
+        values = [res.samples[offs[i] : offs[i + 1]].tobytes() for i in range(res.count)]
+    return list(zip(res.indices.tolist(), res.keys, values))
+
+
+@pytest.mark.parametrize("kind", ["zlib", "variable"])
+def test_batch_read_packed_compressed_and_variable_width(spark, store, kind):
+    """A packed batch read over a ZLIB stream and a VARIABLE_WIDTH_BYTES
+    stream (33 batch files each) returns dense sample_index and the rows
+    the transport reader returns."""
+    from river_spark.transport.compression import CompressionMode, Compressor
+
+    log = StreamLog(store)
+    n = 33 * 30
+    if kind == "zlib":
+        schema = StreamSchema([FieldDefinition("v", FieldType.DOUBLE)])
+        w = StreamWriter(log, batch_size=30, compression=Compressor(CompressionMode.ZLIB_LOSSLESS))
+        w.initialize(kind, schema)
+        arr = np.zeros(n, dtype=schema.dtype())
+        arr["v"] = np.sin(np.arange(n))
+        w.write(arr)
+    else:
+        schema = StreamSchema([FieldDefinition("v", FieldType.VARIABLE_WIDTH_BYTES, size=16)])
+        w = StreamWriter(log, batch_size=30).initialize(kind, schema)
+        payloads = [bytes([i % 256]) * (i % 17) for i in range(n)]
+        flat = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+        w.write(flat, sizes=np.array([len(p) for p in payloads]))
+    w.stop()
+    register(spark)
+    df = spark.read.format("river").option("path", store).option("stream", kind).load()
+    rows = [(r.sample_index, r.key, bytes(r.v) if kind == "variable" else r.v) for r in df.collect()]
+    rows.sort()
+    assert [r[0] for r in rows] == list(range(n))
+    assert rows == _reader_rows(store, kind)
+
+
+def test_spark_ingester_parquet_dictionary_rule(spark, store, tmp_path):
+    """The Spark ingester writes Parquet under the batch ingester's
+    dictionary rule — no dictionary on a float column even where one would
+    be tiny (a constant column), one on integer columns — and leaves no
+    setting behind in the session."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    log = StreamLog(store)
+    schema = StreamSchema(
+        [FieldDefinition("a", FieldType.INT64), FieldDefinition("b", FieldType.DOUBLE)]
+    )
+    w = StreamWriter(log).initialize("dr", schema)
+    w.write(np.zeros(500, dtype=schema.dtype()))
+    w.stop()
+    q = ingest_stream_continuous(spark, store, "dr", str(tmp_path / "o"))
+    q.awaitTermination(120)
+    for col in ("sample_index", "key", "b"):
+        assert spark.conf.get(f"parquet.enable.dictionary#{col}", None) is None
+    files = glob.glob(str(tmp_path / "o" / "dr" / "*.parquet"))
+    assert files
+    for f in files:
+        rg = pq.ParquetFile(f).metadata.row_group(0)
+        cols = [rg.column(i) for i in range(rg.num_columns)]
+        assert {c.path_in_schema: c.has_dictionary_page for c in cols} == {
+            "sample_index": False,
+            "key": False,
+            "timestamp_ms": True,
+            "a": True,
+            "b": False,
+        }

@@ -298,3 +298,113 @@ def test_compression_refuses_variable_width(log):
         with pytest.raises(SchemaError, match="compression is not supported for variable-width"):
             w.initialize("novarcomp", schema)
     assert log.list_streams() == []  # refusal left no metadata behind
+
+
+# -- decode once: the reader holds the batch its cursor is inside ----------------
+def _spy_batch_reads(monkeypatch, log) -> list[str]:
+    """Record every ``StreamLog.read_batch`` handle ``log`` is asked for."""
+    calls: list[str] = []
+    read_batch = log.read_batch
+
+    def spy(handle):
+        calls.append(handle)
+        return read_batch(handle)
+
+    monkeypatch.setattr(log, "read_batch", spy)
+    return calls
+
+
+def _write_decode_stream(log, name, kind, n=1000, batch_size=100, entries_per_segment=1 << 24):
+    """A ZLIB stream of int/double samples, or an uncompressed
+    VARIABLE_WIDTH_BYTES stream of 0-19-byte payloads (compression is not
+    supported for variable width)."""
+    from river_spark.transport.compression import CompressionMode, Compressor
+
+    if kind == "zlib":
+        schema = StreamSchema([FieldDefinition("i", FieldType.INT64), FieldDefinition("v", FieldType.DOUBLE)])
+        w = StreamWriter(
+            log,
+            batch_size=batch_size,
+            entries_per_segment=entries_per_segment,
+            compression=Compressor(CompressionMode.ZLIB_LOSSLESS),
+        ).initialize(name, schema)
+        arr = make_samples(schema, n)
+        arr["v"] = np.sin(np.arange(n))
+        w.write(arr)
+    else:
+        schema = StreamSchema([FieldDefinition("b", FieldType.VARIABLE_WIDTH_BYTES, size=32)])
+        w = StreamWriter(log, batch_size=batch_size, entries_per_segment=entries_per_segment)
+        w.initialize(name, schema)
+        payloads = [bytes([i % 251]) * (i % 20) for i in range(n)]
+        flat = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+        w.write(flat, sizes=np.array([len(p) for p in payloads]))
+    w.stop()
+
+
+def _drain(reader, n_per_read):
+    """Read to EOF in ``n_per_read`` reads; the concatenated samples,
+    sizes (variable width) and indices."""
+    samples, sizes, indices = [], [], []
+    while True:
+        res = reader.read(n_per_read, timeout_ms=50)
+        if res.eof:
+            break
+        samples.append(res.samples)
+        indices.append(res.indices)
+        if res.sizes is not None:
+            sizes.append(res.sizes)
+    return (
+        np.concatenate(samples),
+        np.concatenate(sizes) if sizes else None,
+        np.concatenate(indices),
+    )
+
+
+@pytest.mark.parametrize("kind", ["zlib", "variable"])
+def test_small_reads_decode_each_stored_batch_once(log, monkeypatch, kind):
+    """32-sample reads over 100-sample stored batches (segment hops
+    included) read and decompress each batch once, and return exactly the
+    bytes one large read returns."""
+    _write_decode_stream(log, "once", kind, entries_per_segment=350)
+    one_read = StreamReader(log).initialize("once").read(10_000, timeout_ms=50)
+    stored = [b[4] for s in log.list_segments("once") for b in log.list_batches("once", s)]
+
+    calls = _spy_batch_reads(monkeypatch, log)
+    samples, sizes, indices = _drain(StreamReader(log).initialize("once"), 32)
+    assert sorted(calls) == sorted(stored)  # one call per stored batch
+    np.testing.assert_array_equal(indices, np.arange(1000))
+    assert samples.tobytes() == one_read.samples.tobytes()
+    if kind == "variable":
+        np.testing.assert_array_equal(sizes, one_read.sizes)
+
+
+@pytest.mark.parametrize("kind", ["zlib", "variable"])
+def test_held_batch_never_goes_stale(log, kind):
+    """A read after ``seek``, ``tail`` or a segment hop returns the
+    samples at the new cursor, not slices of the batch held before."""
+    _write_decode_stream(log, "stale", kind, entries_per_segment=350)
+    full = StreamReader(log).initialize("stale").read(10_000, timeout_ms=50, with_keys=True)
+
+    def expect(res, first):
+        """``res`` holds samples ``first..`` of the stream."""
+        np.testing.assert_array_equal(res.indices, np.arange(first, first + res.count))
+        if kind == "zlib":
+            assert res.samples.tobytes() == full.samples[first : first + res.count].tobytes()
+        else:
+            offs = np.concatenate([[0], np.cumsum(full.sizes)])
+            assert res.samples.tobytes() == full.samples[offs[first] : offs[first + res.count]].tobytes()
+
+    r = StreamReader(log).initialize("stale")
+    expect(r.read(32, timeout_ms=50), 0)  # cursor inside batch 0
+    assert r.seek(full.keys[249]) == 218
+    expect(r.read(32, timeout_ms=50), 250)  # inside batch 2, same segment
+    assert r.seek(full.keys[359]) == 78  # into the next segment
+    expect(r.read(32, timeout_ms=50), 360)
+    # segments hold 350 samples: the read at 680 hops from segment 1 to 2
+    r2 = StreamReader(log).initialize("stale")
+    r2.seek(full.keys[679])
+    for first in (680, 712, 744):
+        expect(r2.read(32, timeout_ms=50), first)
+    skipped, res = r2.tail(timeout_ms=50)
+    assert skipped == 999 - 776
+    expect(res, 999)
