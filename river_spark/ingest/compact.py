@@ -112,10 +112,11 @@ def recover(out_dir: str) -> int:
         os.unlink(jpath)
         resolved += 1
     # merged tmps orphaned by a crash BEFORE the journal write (no journal
-    # refers to them anymore): plain rollbacks, delete so they can't leak
-    # a target-size file per incident
+    # refers to them anymore), or while write_parquet was still writing
+    # one (``.inprogress``): plain rollbacks, delete so they can't leak a
+    # target-size file per incident
     for n in names:
-        if n.endswith(".compact.tmp"):
+        if n.endswith((".compact.tmp", ".compact.tmp.inprogress")):
             p = os.path.join(out_dir, n)
             if os.path.exists(p):
                 os.unlink(p)
@@ -129,21 +130,14 @@ def _compact_group(out_dir: str, group: list[str]) -> int:
     target = group[-1]
     absorbed = group[:-1]
     merged = pa.concat_tables([pq.read_table(os.path.join(out_dir, n)) for n in group])
+    tmp = os.path.join(out_dir, target + ".compact.tmp")
+    write_parquet(tmp, [merged])
+    # journal BEFORE the switch: from here a crash is always recoverable
     jpath = os.path.join(out_dir, f"{_JOURNAL_PREFIX}{target}.json")
-
-    def journal():
-        # journal BEFORE the switch: from here a crash is always recoverable
-        with open(jpath + ".tmp", "w") as f:
-            json.dump({"target": target, "absorbed": absorbed}, f)
-        os.replace(jpath + ".tmp", jpath)
-
-    # the rename onto target is the atomic switch
-    write_parquet(
-        os.path.join(out_dir, target),
-        merged,
-        tmp=os.path.join(out_dir, target + ".compact.tmp"),
-        before_rename=journal,
-    )
+    with open(jpath + ".tmp", "w") as f:
+        json.dump({"target": target, "absorbed": absorbed}, f)
+    os.replace(jpath + ".tmp", jpath)
+    os.replace(tmp, os.path.join(out_dir, target))  # the atomic switch
     for name in absorbed:
         os.unlink(os.path.join(out_dir, name))
     os.unlink(jpath)

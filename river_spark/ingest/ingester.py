@@ -219,7 +219,7 @@ class SingleStreamIngester:
                 path = os.path.join(self.out_dir, f"data_{file_idx:010d}.parquet")
                 if os.path.exists(path):  # never overwrite (ingester.cpp:288-292)
                     raise FileExistsError(path)
-                write_parquet(path, pa.Table.from_batches([batch]))
+                write_parquet(path, [pa.Table.from_batches([batch])])
                 file_idx += 1
                 self._delete_up_to(reader)
             if saw_eof:
@@ -266,7 +266,7 @@ class SingleStreamIngester:
                 # a lone part already is the combined file: rename it
                 os.replace(paths[0], final)
             else:
-                write_parquet(final, pa.concat_tables([pq.read_table(p) for p in paths]))
+                write_parquet(final, [pa.concat_tables([pq.read_table(p) for p in paths])])
                 for p in paths:
                     os.remove(p)
         write_output_metadata(self.log, self.stream_name, self.out_dir, self.settings)

@@ -3,62 +3,78 @@
 (ingester.cpp:395-401), dictionary encoding only on columns where it can
 pay, written to a temp file and renamed into place.
 
-Dictionary rule: floating-point samples are nearly all distinct, and
-``sample_index`` and ``key`` are unique per row. On those columns
-pyarrow's default dictionary pass costs time and writes a dictionary of
-(nearly) every value plus indices into it, larger than the plain values.
-Integer, timestamp and byte columns keep it.
+Dictionary rule, decided from the data: a column gets no dictionary when
+no value repeats among up to ``SAMPLE_ROWS`` of its rows (a seeded random
+sample). On a table of at most that many rows this is exact — every value
+distinct, so a dictionary of every value plus an index per row is larger
+than the plain values. On a larger table it is a birthday test: a column
+of ``d`` distinct values shows no repeat among ``k`` sampled rows with
+probability about ``exp(-k² / 2d)``, which at ``k = 2048`` is below
+``4e-4`` for any ``d`` up to 262,144 — the most 4-byte entries pyarrow's
+and parquet-mr's 1 MiB dictionary page holds. A column with so few
+distinct values that a dictionary fits keeps one; a column without a
+repeat almost surely overflows the page, and the writer would fall back
+to plain encoding after paying for the dictionary pass. Unique columns
+(``sample_index``, ``key``, random floats or ids) fall in the second case;
+constant, quantized or flag columns in the first.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
-from typing import Callable, Iterable
+from typing import Iterable
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-_UNIQUE_COLUMNS = ("sample_index", "key")
+SAMPLE_ROWS = 2048
 
 
-def dictionary_columns(schema: pa.Schema) -> list[str]:
-    """The columns of ``schema`` written with dictionary encoding."""
+def plain_columns(table: pa.Table) -> list[str]:
+    """The columns of ``table`` written without a dictionary: those with
+    no repeated value (nulls count as a value) among a seeded random
+    sample of up to ``SAMPLE_ROWS`` rows."""
+    if table.num_rows == 0:
+        return []
+    if table.num_rows > SAMPLE_ROWS:
+        rows = np.random.default_rng(0).choice(table.num_rows, SAMPLE_ROWS, replace=False)
+        table = table.take(np.sort(rows))
     return [
-        f.name
-        for f in schema
-        if not pa.types.is_floating(f.type) and f.name not in _UNIQUE_COLUMNS
+        name
+        for name, col in zip(table.column_names, table.columns)
+        if pc.count_distinct(col, mode="all").as_py() == len(col)
     ]
 
 
 def write_parquet(
     path: str,
-    data: pa.Table | Iterable[pa.Table],
+    tables: Iterable[pa.Table],
     schema: pa.Schema | None = None,
     tmp: str | None = None,
-    before_rename: Callable[[], None] | None = None,
 ) -> None:
-    """Write ``data`` to ``tmp`` (default ``path + ".inprogress"``), call
-    ``before_rename``, then rename ``tmp`` onto ``path``. ``data`` is one
-    Table, or an iterable of Tables of ``schema`` written one at a time
-    (peak memory is one of them). A failed write removes ``tmp``; once
-    ``tmp`` is complete it stays until the rename, so a caller's
-    ``before_rename`` journal can rely on it (ingest/compact.py)."""
+    """Write ``tables`` one at a time (peak memory is one of them) to
+    ``tmp`` (default ``path + ".inprogress"``), then rename it onto
+    ``path``. The schema defaults to the first table's; the dictionary
+    rule is decided from the first table. A failed write removes ``tmp``."""
+    tables = iter(tables)
+    first = next(tables, None)
+    schema = schema if schema is not None else first.schema
+    plain = set() if first is None else set(plain_columns(first))
     tmp = tmp or path + ".inprogress"
     try:
-        if isinstance(data, pa.Table):
-            pq.write_table(
-                data, tmp, compression="snappy", use_dictionary=dictionary_columns(data.schema)
-            )
-        else:
-            with pq.ParquetWriter(
-                tmp, schema, compression="snappy", use_dictionary=dictionary_columns(schema)
-            ) as writer:
-                for table in data:
-                    writer.write_table(table)
+        with pq.ParquetWriter(
+            tmp,
+            schema,
+            compression="snappy",
+            use_dictionary=[n for n in schema.names if n not in plain],
+        ) as writer:
+            for table in itertools.chain([first] if first is not None else [], tables):
+                writer.write_table(table)
     except BaseException:
         if os.path.exists(tmp):
             os.unlink(tmp)
         raise
-    if before_rename is not None:
-        before_rename()
     os.replace(tmp, path)

@@ -10,7 +10,8 @@ Mapping (SURVEY.md §7 Phase 4, reference cpp/ingester/src/):
 - 1 s driver cadence (ingester_main.cpp:96-99)  → processingTime trigger;
 - row-group sizing (ingester_settings.h:20)     → maxRecordsPerFile;
 - Parquet dictionary rule (ingest/parquet.py)   → per-column
-  ``parquet.enable.dictionary#<column>`` settings when the query starts;
+  ``parquet.enable.dictionary#<column>`` settings when the query starts,
+  decided from the stream's first samples;
 - column pruning (A18)                          → ``select`` projection from
   the same settings object (Catalyst prunes the scan);
 - retention (A16)                               → source ``commit()`` with
@@ -28,15 +29,18 @@ from __future__ import annotations
 
 import contextlib
 import os
+import threading
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
-from river_spark.ingest.ingester import arrow_schema, write_output_metadata
-from river_spark.ingest.parquet import dictionary_columns
+from river_spark.ingest.ingester import arrow_batch, arrow_schema, write_output_metadata
+from river_spark.ingest.parquet import SAMPLE_ROWS, plain_columns
 from river_spark.ingest.settings import IngesterSettings, StreamIngestionSettings
 from river_spark.schema import StreamSchema
 from river_spark.sources import register
 from river_spark.transport.log import is_reserved_stream, locator_option, open_log_root
+from river_spark.transport.reader import StreamReader
 
 
 def ingest_stream_continuous(
@@ -95,35 +99,54 @@ def ingest_stream_continuous(
         writer = writer.partitionBy("date")
     trigger = trigger or {"availableNow": True}
     writer = writer.trigger(**trigger)
-    with _parquet_dictionary_rule(spark, arrow_schema(schema, fields)):
+    with _parquet_dictionary_rule(spark, _stream_head(log, stream, schema, fields)):
         return writer.start()
 
 
+def _stream_head(log, stream: str, schema: StreamSchema, fields: list[str]) -> pa.Table:
+    """The first ``SAMPLE_ROWS`` samples of ``stream`` (fewer if fewer are
+    there, none waited for) as the rows the ingester writes."""
+    res = StreamReader(log).initialize(stream).read(SAMPLE_ROWS, timeout_ms=0)
+    if res.count <= 0:
+        return arrow_schema(schema, fields).empty_table()
+    batch = arrow_batch(schema, res.samples, res.sizes, res.indices, res.key_runs, fields)
+    return pa.Table.from_batches([batch])
+
+
+# serializes _parquet_dictionary_rule's save, start and restore of the
+# shared session's settings across threads
+_SESSION_CONF_LOCK = threading.Lock()
+
+
 @contextlib.contextmanager
-def _parquet_dictionary_rule(spark: SparkSession, schema):
+def _parquet_dictionary_rule(spark: SparkSession, head: pa.Table):
     """Spark's Parquet writer under the dictionary rule of
-    ``ingest/parquet.py``: a session setting
+    ``ingest/parquet.py``, decided from ``head``, the stream's first
+    samples (the rest is not known when the query starts; a column whose
+    values first repeat further on is written plain): a session setting
     ``parquet.enable.dictionary#<column>=false`` per column the rule
     excludes, for the block only. Spark copies session settings into the
     Hadoop configuration of a file sink when the sink is created, which for
-    a streaming query is at ``start()`` (another Parquet writer the session
-    creates meanwhile sees the settings too). Without them each task's
-    writer holds a dictionary of every distinct double until its file
-    closes: tens of MB of JVM heap per task, which outlive young
+    a streaming query is at ``start()``. The block holds a module lock, so
+    queries started from several threads do not interleave their settings;
+    a Parquet write the session runs on another thread during the block
+    still sees them. Without them a task's writer holds a dictionary of
+    every distinct value of such a column until the writer falls back to
+    plain encoding: tens of MB of JVM heap per task, which outlive young
     collections and are promoted."""
-    excluded = set(schema.names) - set(dictionary_columns(schema))
-    keys = [f"parquet.enable.dictionary#{name}" for name in sorted(excluded)]
-    saved = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "false")
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    keys = [f"parquet.enable.dictionary#{name}" for name in sorted(plain_columns(head))]
+    with _SESSION_CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in keys}
+        for k in keys:
+            spark.conf.set(k, "false")
+        try:
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def ingest_streams(

@@ -163,3 +163,17 @@ def test_recover_cleans_truncated_journal_and_orphan_tmp(parts_dir):
     leftovers = [f for f in os.listdir(d) if ".compact.tmp" in f or "_compact_journal_" in f]
     assert leftovers == []
     np.testing.assert_array_equal(_read_all(d), arr["v"])
+
+
+def test_recover_cleans_tmp_of_a_crashed_merge_write(parts_dir):
+    """A crash while the merged file is still being written leaves the
+    writer's own temp (``.compact.tmp.inprogress``), no journal: a
+    rollback."""
+    _log, d, arr, _w, _out = parts_dir
+    names = _part_names(d)
+    with open(os.path.join(d, names[1] + ".compact.tmp.inprogress"), "wb") as f:
+        f.write(b"half-written")
+    assert recover(d) == 1
+    assert [f for f in os.listdir(d) if ".compact.tmp" in f] == []
+    assert _part_names(d) == names
+    np.testing.assert_array_equal(_read_all(d), arr["v"])

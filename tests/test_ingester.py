@@ -213,36 +213,80 @@ def test_finalize_tiered_above_single_file_threshold(log, out):
     assert os.path.exists(os.path.join(d, "metadata.json"))
 
 
+def _dictionary_pages(path):
+    md = pq.ParquetFile(path).metadata
+    cols = [md.row_group(0).column(i) for i in range(md.num_columns)]
+    for c in cols:  # a column without a dictionary page is all PLAIN
+        assert c.has_dictionary_page or "RLE_DICTIONARY" not in c.encodings
+    return {c.path_in_schema: c.has_dictionary_page for c in cols}
+
+
 def test_parquet_dictionary_only_where_it_pays(log, out):
-    """Ingested Parquet writes float columns, ``key`` and ``sample_index``
-    without a dictionary page, keeps one on the integer fields and
-    ``timestamp_ms``, and the values are unchanged."""
-    _, arr = write_stream(log, "dict", n=300)
+    """Ingested Parquet keeps a dictionary on every column whose values
+    repeat — constant and quantized floats, flags, ``timestamp_ms`` —
+    and writes plain the columns without a repeat in the rule's sample:
+    ``sample_index``, ``key``, random floats, unique ids. Values are
+    unchanged. 5,000 rows, so the rule samples."""
+    schema = StreamSchema(
+        [
+            FieldDefinition("noise", FieldType.DOUBLE),
+            FieldDefinition("constant", FieldType.DOUBLE),
+            FieldDefinition("quantized", FieldType.FLOAT),
+            FieldDefinition("id", FieldType.INT64),
+            FieldDefinition("flag", FieldType.INT32),
+        ]
+    )
+    n = 5000
+    rng = np.random.default_rng(3)
+    arr = np.zeros(n, dtype=schema.dtype())
+    arr["noise"] = rng.standard_normal(n)
+    arr["constant"] = 1.5
+    arr["quantized"] = np.round(rng.standard_normal(n), 1)
+    arr["id"] = rng.permutation(n) * 7919
+    arr["flag"] = rng.integers(0, 2, n)
+    w = StreamWriter(log, batch_size=256).initialize("dict", schema)
+    w.write(arr)
+    w.stop()
     res = SingleStreamIngester(log, out, "dict", default_settings()).ingest()
     assert res is IngestResult.COMPLETED
     path = os.path.join(out, "dict", "data.parquet")
-    md = pq.ParquetFile(path).metadata
-    has_dict = {
-        md.row_group(0).column(i).path_in_schema: md.row_group(0).column(i).has_dictionary_page
-        for i in range(md.num_columns)
-    }
-    assert has_dict == {
+    assert _dictionary_pages(path) == {
         "sample_index": False,
         "key": False,
         "timestamp_ms": True,
-        "d": False,
-        "i32": True,
-        "i64": True,
+        "noise": False,
+        "constant": True,
+        "quantized": True,
+        "id": False,
+        "flag": True,
     }
-    assert all(
-        "RLE_DICTIONARY" not in md.row_group(0).column(i).encodings
-        for i in range(md.num_columns)
-        if not has_dict[md.row_group(0).column(i).path_in_schema]
-    )
     t = pq.read_table(path)
-    for name in ("d", "i32", "i64"):
+    for name in schema.field_names():
         np.testing.assert_array_equal(t.column(name).to_numpy(), arr[name])
-    np.testing.assert_array_equal(t.column("sample_index").to_numpy(), np.arange(300))
+    np.testing.assert_array_equal(t.column("sample_index").to_numpy(), np.arange(n))
+
+
+def test_plain_columns_birthday_rule():
+    """On a table larger than the sample, a column of 50,000 values
+    cycling over 200,000 rows keeps its dictionary (a dictionary page
+    holds it); a column with no repeat does not. A table no larger than
+    the sample is judged on every row."""
+    import pyarrow as pa
+
+    from river_spark.ingest.parquet import SAMPLE_ROWS, plain_columns
+
+    n = 200_000
+    t = pa.table(
+        {
+            "cycle": np.arange(n) % 50_000,
+            "unique": np.arange(n, dtype=np.float64),
+            "text": pa.array([f"k{i % 100}" for i in range(n)]),
+        }
+    )
+    assert plain_columns(t) == ["unique"]
+    small = pa.table({"a": np.arange(SAMPLE_ROWS), "b": np.r_[np.arange(SAMPLE_ROWS - 1), 0]})
+    assert plain_columns(small) == ["a"]
+    assert plain_columns(small.slice(0, 0)) == []
 
 
 def test_finalize_renames_lone_part(log, out, monkeypatch):

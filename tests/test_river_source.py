@@ -1,6 +1,7 @@
 """Spark DataSource tests: batch read, streaming read (availableNow),
 streaming ingestion pipeline, batch write sink, retention on commit."""
 
+import math
 import os
 
 import numpy as np
@@ -625,9 +626,11 @@ def _wide_stream(store, name, n_files=33, per_file=64):
 
 @pytest.mark.parametrize("cores", [1, 2, 3, 8, None])
 def test_stream_partitions_pack_contiguous_slices(store, monkeypatch, cores):
-    """A mid-file [start, end) over 33 batch files packs into at most
-    ``cores`` partitions whose slices cover every sample exactly once, in
-    order, with the right lo/hi at both edges."""
+    """A mid-file [start, end) over 33 batch files (~8.6 MB) packs into
+    at most ``cores`` partitions — or, where the stream passes cores² ×
+    4 MiB (a 1-core planner), sqrt(total / 4 MiB) of them — whose slices
+    cover every sample exactly once, in order, with the right lo/hi at
+    both edges."""
     from river_spark.sources import river_source
     from river_spark.sources.river_source import RiverStreamReader
 
@@ -639,7 +642,8 @@ def test_stream_partitions_pack_contiguous_slices(store, monkeypatch, cores):
     start, end = 10, 33 * 64 - 7
     r = RiverStreamReader({"path": store, "stream": "pk"})
     parts = r.partitions({"index": start}, {"index": end})
-    assert 1 <= len(parts) <= river_source._planning_cores()
+    spread = math.ceil(math.sqrt((end - start) * 4096 / (4 << 20)))
+    assert 1 <= len(parts) <= max(river_source._planning_cores(), spread)
 
     slices = [s for p in parts for s in p.slices]
     assert all(p.slices for p in parts)
@@ -653,6 +657,46 @@ def test_stream_partitions_pack_contiguous_slices(store, monkeypatch, cores):
     assert (slices[0][4], slices[-1][5]) == (10, 64 - 7)  # mid-file edges
     got = np.concatenate([b.column("a").to_numpy() for p in parts for b in r.read(p)])
     np.testing.assert_array_equal(got, np.arange(start, end))
+
+
+class _SyntheticLog:
+    """Just the listing ``_pack`` plans from: ``n`` batch files of
+    ``per_file`` samples in one segment."""
+
+    def __init__(self, n, per_file):
+        self.batches = [(i * per_file, per_file, 1000 + i, 0, f"b{i}") for i in range(n)]
+
+    def list_segments(self, stream):
+        return [0]
+
+    def list_batches(self, stream, seg):
+        return self.batches
+
+
+def test_pack_spreads_a_large_stream_beyond_the_planner_cores(monkeypatch):
+    """The planner sees only its own cores, not the cluster's width, so a
+    large stream on a small planner is not packed into one split per core:
+    ~500 MB over 4 cores runs as at least sqrt(total / 4 MiB) splits (11),
+    not 4 of 125 MB. A small stream still packs into one split per core,
+    and at 100 TB a split is 128 MiB, as for a Parquet scan."""
+    from river_spark.sources import river_source
+
+    monkeypatch.setattr(river_source, "_planning_cores", lambda: 4)
+    schema_json = StreamSchema([FieldDefinition("v", FieldType.DOUBLE)]).to_json()
+    per_file = 1536
+    n_files = 500_000_000 // (8 * per_file)  # ~500 MB of 8-byte samples
+    log = _SyntheticLog(n_files, per_file)
+    parts = river_source._pack(log, "s", 0, float("inf"), {"path": "x"}, schema_json, None)
+    total = n_files * per_file * 8
+    assert len(parts) >= math.sqrt(total / (4 << 20)) > 10
+    covered = [s for p in parts for s in p.slices]
+    assert sum(hi - lo for *_h, lo, hi in covered) == n_files * per_file
+
+    small = _SyntheticLog(33, per_file)  # ~0.4 MB: one split under the 4 MiB floor
+    assert len(river_source._pack(small, "s", 0, float("inf"), {}, schema_json, None)) == 1
+    mid = 40_000_000  # the ingest benchmark's size: one split per core
+    assert mid / river_source._split_bytes(mid, 4) == 4
+    assert river_source._split_bytes(100e12, 4) == 128 << 20
 
 
 def _reader_rows(store, name):
@@ -701,23 +745,31 @@ def test_batch_read_packed_compressed_and_variable_width(spark, store, kind):
 
 def test_spark_ingester_parquet_dictionary_rule(spark, store, tmp_path):
     """The Spark ingester writes Parquet under the batch ingester's
-    dictionary rule — no dictionary on a float column even where one would
-    be tiny (a constant column), one on integer columns — and leaves no
-    setting behind in the session."""
+    dictionary rule, decided from the stream's first samples: no
+    dictionary on columns without a repeat (random floats,
+    ``sample_index``, ``key``), one on repeating columns whatever their
+    type (a constant float, a constant integer, ``timestamp_ms``), and no
+    setting left behind in the session."""
     import glob
 
     import pyarrow.parquet as pq
 
     log = StreamLog(store)
     schema = StreamSchema(
-        [FieldDefinition("a", FieldType.INT64), FieldDefinition("b", FieldType.DOUBLE)]
+        [
+            FieldDefinition("a", FieldType.INT64),
+            FieldDefinition("b", FieldType.DOUBLE),
+            FieldDefinition("c", FieldType.DOUBLE),
+        ]
     )
+    arr = np.zeros(500, dtype=schema.dtype())
+    arr["c"] = np.random.default_rng(5).standard_normal(500)
     w = StreamWriter(log).initialize("dr", schema)
-    w.write(np.zeros(500, dtype=schema.dtype()))
+    w.write(arr)
     w.stop()
     q = ingest_stream_continuous(spark, store, "dr", str(tmp_path / "o"))
     q.awaitTermination(120)
-    for col in ("sample_index", "key", "b"):
+    for col in ("sample_index", "key", "timestamp_ms", "a", "b", "c"):
         assert spark.conf.get(f"parquet.enable.dictionary#{col}", None) is None
     files = glob.glob(str(tmp_path / "o" / "dr" / "*.parquet"))
     assert files
@@ -729,5 +781,6 @@ def test_spark_ingester_parquet_dictionary_rule(spark, store, tmp_path):
             "key": False,
             "timestamp_ms": True,
             "a": True,
-            "b": False,
+            "b": True,
+            "c": False,
         }
