@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from river_spark.operators.similarity import dot, norm
+
 
 def shingles(
     df: DataFrame,
@@ -180,7 +182,14 @@ def _two_phase_group(
     explicit count opts out of coalescing and REPLACES the required
     exchange (hash partitioning on the same keys), so the shuffle count
     is unchanged. None (the default, all other callers) keeps the
-    AQE-planned shape."""
+    AQE-planned shape.
+
+    NULL keys form one window group, so rows with a NULL key are counted,
+    capped and collected together as one bucket (the old semi join
+    dropped them). No caller has one: ``band`` is a posexplode position,
+    and ``bucket`` is an ``xxhash64`` output (MinHash bands, cosine
+    signatures) or a SimHash chunk of an ``xxhash64`` built with
+    ``when``/``otherwise`` — never NULL. There is deliberately no filter."""
     from pyspark.sql import Window
 
     if num_partitions is not None:
@@ -633,13 +642,8 @@ def cosine_dedup(
         vecs, ["bucket"], F.collect_list(F.struct("doc_id", "v")), max_bucket
     )
     pairs = _in_bucket_pairs(grouped, "v")
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(F.zip_with(c, c, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    cos = dot / (norm("v_a") * norm("v_b"))
+    v_a, v_b = F.col("v_a"), F.col("v_b")
+    cos = dot(v_a, v_b) / (norm(v_a) * norm(v_b))
     return (
         pairs.select("doc_a", "doc_b", F.round(cos, 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)

@@ -2,21 +2,25 @@
 
 - ``brute_force_topk``: exact cosine top-k — the correctness baseline and
   the right plan for broadcastable query sets (scan is embarrassingly
-  parallel, top-k is TakeOrderedAndProject, no full sort).
+  parallel).
 - ``lsh_topk``: random-hyperplane LSH — the 100 TB path. The corpus is
   bucketed once (write-time in production); a query probes only buckets
   within ``probe_hamming`` of its own signature, turning an O(N) scan
   into O(N / 2^planes × buckets_probed).
+- ``ivf_topk``: KMeans cells; a query scores only its nearest cells.
 
-All math stays JVM-side (higher-order functions over array<float>).
+All three score candidate pairs narrow and rank them with one helper,
+:func:`top_k`. All math stays JVM-side (higher-order functions over
+array<float>); :func:`dot` / :func:`norm` are the one fold every vector
+query composes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _dot(a, b):
+def dot(a, b):
     """Dot product of two array columns. Accepts column NAMES (strings) —
     then built as one F.expr SQL string (a single py4j round-trip; the
     Column-API zip_with/aggregate lambda pair costs ~10 JVM round-trips
@@ -34,7 +38,7 @@ def _dot(a, b):
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL text of the :func:`_dot` fold — single-sourced so spark.sql()
+    """SQL text of the :func:`dot` fold — single-sourced so spark.sql()
     query builds (r16) compose the identical expression."""
     return (
         f"aggregate(zip_with({a}, {b}, "
@@ -44,12 +48,37 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """SQL text of :func:`_norm` (same expression tree)."""
+    """SQL text of :func:`norm` (same expression tree)."""
     return f"sqrt({dot_sql(a, a)})"
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
+def norm(a):
+    """L2 norm: ``sqrt`` of the :func:`dot` fold of ``a`` with itself."""
+    return F.sqrt(dot(a, a))
+
+
+def top_k(df: DataFrame, group, order, k: int) -> DataFrame:
+    """The first ``k`` rows of each ``group`` by ``order``: ``row_number()``
+    over the window, kept while ``<= k``, then dropped. Catalyst plans
+    the filter as a WindowGroupLimit. For ``k == 1`` the filter is
+    written ``rn = 1``, the argmin form, so those plans read as before."""
+    w = Window.partitionBy(group).orderBy(*order)
+    keep = F.col("rn") == 1 if k == 1 else F.col("rn") <= k
+    return df.withColumn("rn", F.row_number().over(w)).filter(keep).drop("rn")
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k tail shared by the search operators. ``pairs`` holds the
+    candidate pairs with (query_id, qv, qn) and (doc_id, cv, cn). The
+    raw cosine is projected once, below the window, so the window input
+    is (query_id, doc_id, cos) and no vector rides the sort. Ranking is
+    by that raw value with doc_id as tie-break; round(, 6) applies only
+    to the emitted value."""
+    cos = dot("cv", "qv") / (F.col("cn") * F.col("qn"))
+    scored = pairs.select("query_id", "doc_id", cos.alias("cos"))
+    return top_k(scored, "query_id", [F.desc("cos"), "doc_id"], k).select(
+        "query_id", "doc_id", F.round("cos", 6).alias("cos_sim")
+    )
 
 
 def brute_force_topk(
@@ -57,8 +86,6 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine per query row. ``query`` must be small
     (broadcast); returns [query_id, doc_id, cos_sim] with rank <= k."""
-    from pyspark.sql import Window
-
     # Norms are per-ROW quantities: computing them once in each side's
     # projection instead of inside the per-PAIR cosine cuts the scoring
     # stage's interpreted higher-order-function work from 3 to 1 array
@@ -68,35 +95,17 @@ def brute_force_topk(
     q = query.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        _norm(vec_col).alias("qn"),
+        norm(vec_col).alias("qn"),
     )
     c = corpus.select(
         F.col(id_col).alias("doc_id"),
         F.col(vec_col).alias("cv"),
-        _norm(vec_col).alias("cn"),
+        norm(vec_col).alias("cn"),
     )
-    # r16: scoring + ranking fused into 3 DataFrame ops instead of 5 —
-    # every DataFrame method is an eager py4j analysis round (~12 ms
-    # each on this plan, r16 build audit), and the vector family's wall
-    # is 30-50% driver plan-build. The self-pair filter moves INTO the
-    # join condition (same BroadcastNestedLoopJoin the crossJoin+filter
-    # planned, condition evaluated before any downstream row exists),
-    # and the window ranks by the same raw cos EXPRESSION the old
-    # cos_sim column held (round(,6) applies only to the emitted value,
-    # exactly as before), so ranking and output are bit-identical.
-    cos = _dot("cv", "qv") / (F.col("cn") * F.col("qn"))
-    w = Window.partitionBy("query_id").orderBy(cos.desc(), "doc_id")
-    return (
-        c.join(F.broadcast(q), F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(cos, 6).alias("cos_sim"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= k)
-        .select("query_id", "doc_id", "cos_sim")
-    )
+    # The self-pair filter sits in the join condition: the same
+    # BroadcastNestedLoopJoin a crossJoin + filter plans, with one
+    # DataFrame op (one py4j analysis round) fewer.
+    return _cosine_topk(c.join(F.broadcast(q), F.col("doc_id") != F.col("query_id")), k)
 
 
 def lsh_signature(vec_col: str, n_planes: int = 12, weights=None):
@@ -219,8 +228,6 @@ def lsh_topk(
     the bucket id after expanding the query's probe set (≤ Σ C(planes,h)
     buckets) — no full-corpus scan. ``weights`` pins explicit hyperplanes
     (see lsh_signature) for oracle-reproducible runs."""
-    from pyspark.sql import Window
-
     # cn/qn: per-row norms factored out of the per-pair cosine (see
     # brute_force_topk — bit-identical value, 1 array fold per candidate
     # pair instead of 3).
@@ -228,13 +235,13 @@ def lsh_topk(
         F.col(id_col).alias("doc_id"),
         F.col(vec_col).alias("cv"),
         lsh_signature(vec_col, n_planes, weights).alias("bucket"),
-        _norm(vec_col).alias("cn"),
+        norm(vec_col).alias("cn"),
     )
     q = query.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         lsh_signature(vec_col, n_planes, weights).alias("qsig"),
-        _norm(vec_col).alias("qn"),
+        norm(vec_col).alias("qn"),
     )
     # probe set: all bucket ids within hamming distance (0..probe_hamming),
     # generated generically — a hardcoded h<=2 expansion would silently
@@ -252,29 +259,12 @@ def lsh_topk(
         f"explode(transform(array({', '.join(str(m) for m in masks)}), m -> qsig ^ m))"
     )
     probes = q.select("query_id", "qv", "qn", probe_expr.alias("bucket"))
-    # r16: scoring + ranking fused (7 DataFrame ops instead of 10; each
-    # op is an eager ~12 ms py4j analysis round — see brute_force_topk).
-    # The self-pair predicate joins the equi-condition (Catalyst pushed
-    # the old post-join filter into the join condition anyway), and the
-    # window ranks by the same raw cos expression; round(,6) still
-    # applies only to the emitted value. Bit-identical output.
-    cos = _dot("cv", "qv") / (F.col("cn") * F.col("qn"))
-    w = Window.partitionBy("query_id").orderBy(cos.desc(), "doc_id")
-    return (
-        c.join(
-            F.broadcast(probes),
-            (c["bucket"] == probes["bucket"])
-            & (F.col("doc_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(cos, 6).alias("cos_sim"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= k)
-        .select("query_id", "doc_id", "cos_sim")
+    # the self-pair predicate rides the join condition (see brute_force_topk)
+    pairs = c.join(
+        F.broadcast(probes),
+        (c["bucket"] == probes["bucket"]) & (F.col("doc_id") != F.col("query_id")),
     )
+    return _cosine_topk(pairs, k)
 
 
 def ivf_topk(
@@ -295,8 +285,7 @@ def ivf_topk(
     Uses pyspark.ml KMeans (deterministic via seed); scoring stays in
     higher-order array functions."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.sql import Window
+    from pyspark.ml.functions import array_to_vector
 
     c = corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("cv")).withColumn(
         "features", array_to_vector(F.col("cv").cast("array<double>"))
@@ -305,7 +294,7 @@ def ivf_topk(
     # per-row norm factored out of the per-pair cosine (see
     # brute_force_topk — bit-identical)
     indexed = model.transform(c).select(
-        "doc_id", "cv", "cell", _norm("cv").alias("cn")
+        "doc_id", "cv", "cell", norm("cv").alias("cn")
     )
 
     # broadcastable centroid table for query routing
@@ -317,40 +306,27 @@ def ivf_topk(
     q = query.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        _norm(vec_col).alias("qn"),
+        norm(vec_col).alias("qn"),
     )
-    # rank cells per query by centroid distance, keep n_probes
+    # rank cells per query by centroid distance, keep n_probes. The
+    # ranking sees only (query_id, cell, d2); qv/qn join back from the
+    # broadcast query side, so no vector rides the window sort.
     # one-expr form of the old Column-API zip_with/aggregate (identical
-    # fold, see _dot) — saves the per-lambda py4j build cost
+    # fold, see dot) — saves the per-lambda py4j build cost
     dist2 = F.expr(
         "aggregate(zip_with(qv, centroid, "
         "(a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), "
         "cast(0.0 as double), (acc, x) -> acc + x)"
     )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("d2", dist2)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "qv", "qn", "cell")
+    cells = top_k(
+        q.crossJoin(F.broadcast(cents)).select("query_id", "cell", dist2.alias("d2")),
+        "query_id",
+        ["d2", "cell"],
+        n_probes,
     )
-    # r16: scoring + ranking fused — same op-count/analysis-cost rewrite
-    # as lsh_topk/brute_force_topk, bit-identical output.
-    cos = _dot("cv", "qv") / (F.col("cn") * F.col("qn"))
-    w = Window.partitionBy("query_id").orderBy(cos.desc(), "doc_id")
-    return (
-        indexed.join(
-            F.broadcast(probes),
-            (indexed["cell"] == probes["cell"])
-            & (F.col("doc_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(cos, 6).alias("cos_sim"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= k)
-        .select("query_id", "doc_id", "cos_sim")
+    probes = cells.join(F.broadcast(q), "query_id")
+    pairs = indexed.join(
+        F.broadcast(probes),
+        (indexed["cell"] == probes["cell"]) & (F.col("doc_id") != F.col("query_id")),
     )
+    return _cosine_topk(pairs, k)

@@ -14,9 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from river_spark.operators.similarity import dot, norm
 from river_spark.queries.relational import q
 from river_spark.queries.tables import tbl
-from river_spark.queries.vectors import _dot, _norm
 
 
 @q(
@@ -58,13 +58,13 @@ def emb_adjacent_cosine_hist(spark, sf_dir):
     p = (
         a.join(b, F.col("a.vec_id") == F.col("b.join_id"))
         .filter(
-            (_dot(F.col("a.embedding"), F.col("a.embedding")) > 0)
-            & (_dot(F.col("emb_b"), F.col("emb_b")) > 0)
+            (dot(F.col("a.embedding"), F.col("a.embedding")) > 0)
+            & (dot(F.col("emb_b"), F.col("emb_b")) > 0)
         )
         .select(
             (
-                _dot(F.col("a.embedding"), F.col("emb_b"))
-                / (_norm(F.col("a.embedding")) * _norm(F.col("emb_b")))
+                dot(F.col("a.embedding"), F.col("emb_b"))
+                / (norm(F.col("a.embedding")) * norm(F.col("emb_b")))
             ).alias("cos")
         )
     )

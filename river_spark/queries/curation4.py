@@ -13,16 +13,10 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from river_spark.operators.similarity import dot
 from river_spark.queries.relational import q
 from river_spark.queries.tables import spread_scan, tbl
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from river_spark.queries.vectors import first_centroids, nearest_centroid
 
 
 @q(
@@ -187,29 +181,19 @@ def emb_semdedup(spark, sf_dir):
     The K-row centroid table is broadcast; the self-join shuffles
     co-partitioned on cluster_id."""
     emb = tbl(spark, sf_dir, "embeddings")
-    cents = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
-        )
-    )
-    e, c = F.col("embedding"), F.col("cv")
-    dist2 = F.round(_dot(e, e) - 2 * _dot(e, c) + _dot(c, c), 6)
-    d = emb.crossJoin(cents).select("vec_id", "c_id", "embedding", dist2.alias("dist2"))
-    w = Window.partitionBy("vec_id").orderBy("dist2", "c_id")
     # r15: per-row norms factored out of the per-PAIR cosine (the one
     # site the round's norm-factoring pass missed): the in-cluster
     # self-join emits ~|cluster|² pairs and the old shape ran THREE
     # interpreted array folds per pair; the norm fold is per-row data,
-    # computed once here. Bit-identical — _dot(v, v) is the same fold on
+    # computed once here. Bit-identical — dot(v, v) is the same fold on
     # the same values, sqrt/product/round order unchanged.
     assign = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        nearest_centroid(emb, first_centroids(emb), "embedding")
         .select(
             "vec_id",
             F.col("c_id").alias("cluster_id"),
             F.col("embedding").alias("v"),
-            _dot(F.col("embedding"), F.col("embedding")).alias("nv"),
+            dot(F.col("embedding"), F.col("embedding")).alias("nv"),
         )
     )
     a = assign.select(
@@ -225,7 +209,7 @@ def emb_semdedup(spark, sf_dir):
         F.col("nv").alias("nb"),
     )
     cos = F.round(
-        _dot(F.col("av"), F.col("bv"))
+        dot(F.col("av"), F.col("bv"))
         / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))),
         6,
     )

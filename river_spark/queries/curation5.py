@@ -12,18 +12,11 @@ silent quality drop.
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from river_spark.queries.relational import q
 from river_spark.queries.tables import tbl
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from river_spark.queries.vectors import first_centroids, nearest_centroid
 
 
 @q(
@@ -75,16 +68,8 @@ def emb_kmeans_update(spark, sf_dir):
     rounded before the argmin so ulp drift can't flip an assignment
     (ties break on centroid id)."""
     emb = tbl(spark, sf_dir, "embeddings")
-    cents = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
-        )
-    )
-    e, c = F.col("embedding"), F.col("cv")
-    dist2 = F.round(_dot(e, e) - 2 * _dot(e, c) + _dot(c, c), 6)
-    d = emb.crossJoin(cents).select("vec_id", "c_id", "embedding", dist2.alias("dist2"))
-    w = Window.partitionBy("vec_id").orderBy("dist2", "c_id")
-    members = d.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    cents = first_centroids(emb)
+    members = nearest_centroid(emb, cents, "embedding")
     counts = members.groupBy("c_id").agg(F.count("*").alias("n_members"))
     nm = (
         members.select("c_id", F.posexplode("embedding").alias("pos", "val"))

@@ -23,12 +23,13 @@ from river_spark.operators.multimodal import (
     with_payload_metadata,
 )
 from river_spark.operators.similarity import (
-    brute_force_topk,
     dot_sql,
+    ivf_topk,
     lcg_plane_weights,
     lsh_signature_sql,
     lsh_topk,
     norm_sql,
+    top_k,
 )
 from river_spark.queries.relational import q
 from river_spark.queries.tables import spread_scan, tbl, tview
@@ -54,6 +55,17 @@ def _ann_recall_spark_sql(view: str) -> str:
     sig = lsh_signature_sql("embedding", _ANN_RECALL_PLANES, _ANN_RECALL_WEIGHTS)
     masks = ", ".join(str(m) for m in _ANN_RECALL_MASKS)
     cos = f"{dot_sql('cv', 'qv')} / (cn * qn)"
+
+    def top10(side: str, source: str, on: str) -> str:
+        # the ann and bf arms differ only in the broadcast side and the join
+        return f"""
+      SELECT query_id, doc_id FROM (
+        SELECT /*+ BROADCAST({side}) */ {side}.query_id, c.doc_id,
+               row_number() OVER (PARTITION BY {side}.query_id
+                                  ORDER BY {cos} DESC, c.doc_id) AS rn
+        FROM c JOIN {source} ON {on})
+      WHERE rn <= 10"""
+
     return f"""
     WITH c AS (
       SELECT vec_id AS doc_id, embedding AS cv, {sig} AS bucket,
@@ -66,20 +78,8 @@ def _ann_recall_spark_sql(view: str) -> str:
       SELECT query_id, qv, qn,
              explode(transform(array({masks}), m -> qsig ^ m)) AS bucket
       FROM q),
-    ann AS (
-      SELECT query_id, doc_id FROM (
-        SELECT /*+ BROADCAST(p) */ p.query_id, c.doc_id,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {cos} DESC, c.doc_id) AS rn
-        FROM c JOIN probes p ON c.bucket = p.bucket AND c.doc_id != p.query_id)
-      WHERE rn <= 10),
-    bf AS (
-      SELECT query_id, doc_id FROM (
-        SELECT /*+ BROADCAST(q) */ q.query_id, c.doc_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos} DESC, c.doc_id) AS rn
-        FROM c JOIN q ON c.doc_id != q.query_id)
-      WHERE rn <= 10)
+    ann AS ({top10("p", "probes p", "c.bucket = p.bucket AND c.doc_id != p.query_id")}),
+    bf AS ({top10("q", "q", "c.doc_id != q.query_id")})
     SELECT b.query_id,
            cast(coalesce(sum(a.hit), 0) as bigint) AS ann_hits,
            cast(count(*) as bigint) AS exact_k
@@ -334,6 +334,22 @@ def emb_cosine_dedup(spark, sf_dir):
     )
 
 
+def _planted_twin_top1(spark, sf_dir, search, **params):
+    """The first five vectors are the queries, each with an exact twin
+    (vec_id + 1e6) planted in the corpus; returns each query's rank-1
+    hit of the top-10 ``search`` operator by (cos_sim desc, doc_id)."""
+    emb = tbl(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    twins = queries.select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "label", "embedding"
+    )
+    corpus = emb.unionByName(twins)
+    topk = search(corpus, queries, "vec_id", "embedding", k=10, **params)
+    return top_k(topk, "query_id", [F.desc("cos_sim"), "doc_id"], 1).select(
+        "query_id", F.col("doc_id").alias("top1_doc_id"), F.round("cos_sim", 6).alias("top1_cos")
+    )
+
+
 @q(
     "emb_ann_lsh",
     oracle="""
@@ -352,21 +368,7 @@ def emb_ann_lsh(spark, sf_dir):
     cosine 1.0. This verifies bucketing, probe expansion, scoring, and
     ranking end-to-end; recall on weak neighbors is covered by unit
     tests against brute force (tests/test_pipeline_ops.py)."""
-    from pyspark.sql import Window
-
-    emb = tbl(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    twins = queries.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "label", "embedding"
-    )
-    corpus = emb.unionByName(twins)
-    topk = lsh_topk(corpus, queries, "vec_id", "embedding", k=10, n_planes=12, probe_hamming=2)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "doc_id")
-    return (
-        topk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("doc_id").alias("top1_doc_id"), F.round("cos_sim", 6).alias("top1_cos"))
-    )
+    return _planted_twin_top1(spark, sf_dir, lsh_topk, n_planes=12, probe_hamming=2)
 
 
 @q(
@@ -516,23 +518,7 @@ def emb_ann_ivf(spark, sf_dir):
     whose centroid is nearest the query vector — exactly the first cell
     the query probes — so it MUST come back rank-1 with cosine 1.0.
     Recall against brute force is covered in tests/test_pipeline_ops.py."""
-    from pyspark.sql import Window
-
-    from river_spark.operators.similarity import ivf_topk
-
-    emb = tbl(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    twins = queries.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "label", "embedding"
-    )
-    corpus = emb.unionByName(twins)
-    topk = ivf_topk(corpus, queries, "vec_id", "embedding", k=10, n_lists=16, n_probes=3)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "doc_id")
-    return (
-        topk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("doc_id").alias("top1_doc_id"), F.round("cos_sim", 6).alias("top1_cos"))
-    )
+    return _planted_twin_top1(spark, sf_dir, ivf_topk, n_lists=16, n_probes=3)
 
 
 @q(

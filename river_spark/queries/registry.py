@@ -527,7 +527,3 @@ def get_queries():
 
 def get_oracle_sql():
     return {name: q.oracle.strip() for name, q in QUERIES.items() if q.oracle is not None}
-
-
-def bench_queries():
-    return {name: q.fn for name, q in QUERIES.items() if q.bench}

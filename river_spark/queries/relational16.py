@@ -24,11 +24,11 @@ the brief requires.
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
+from river_spark.operators.similarity import dot
 from river_spark.queries.relational import q
 from river_spark.queries.tables import tbl
-from river_spark.queries.vectors import _dot
 
 _MIPS_TOPK = 10
 _PREF_MIN_MARGIN = 50  # quality-score points (per-mille lexical diversity)
@@ -77,16 +77,16 @@ def emb_mips(spark, sf_dir):
     emb = tbl(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     cands = emb.filter(F.col("vec_id") != 0)
-    m2 = cands.agg(F.max(_dot(F.col("embedding"), F.col("embedding"))).alias("m2"))
+    m2 = cands.agg(F.max(dot(F.col("embedding"), F.col("embedding"))).alias("m2"))
     s = (
         cands.crossJoin(F.broadcast(qv))
         .crossJoin(F.broadcast(m2))
         .select(
             "vec_id",
             "label",
-            _dot(F.col("embedding"), F.col("qe")).alias("dot_raw"),
+            dot(F.col("embedding"), F.col("qe")).alias("dot_raw"),
             F.sqrt(
-                F.col("m2") - _dot(F.col("embedding"), F.col("embedding"))
+                F.col("m2") - dot(F.col("embedding"), F.col("embedding"))
             ).alias("aug_raw"),
         )
     )

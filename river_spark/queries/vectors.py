@@ -10,20 +10,32 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from river_spark.operators.similarity import dot, norm, top_k
 from river_spark.queries.relational import q
 from river_spark.queries.tables import tbl
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def first_centroids(emb):
+    """Broadcast centroid table (c_id, cv): the first 8 vectors by id, a
+    deterministic init that keeps an assignment SQL-checkable."""
+    return F.broadcast(
+        emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
+        )
     )
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
+def nearest_centroid(emb, cents, *carry):
+    """One Lloyd assignment step: every ``emb`` row (vec_id, embedding)
+    keeps its nearest row of the broadcast centroid table ``cents``
+    (c_id, cv). Squared distance expands to the three dot folds and is
+    rounded to 6 before the argmin, so ulp drift cannot flip an
+    assignment; ties break on c_id. Returns
+    [vec_id, c_id, *carry, dist2], ``carry`` naming ``emb`` columns."""
+    e, c = F.col("embedding"), F.col("cv")
+    dist2 = F.round(dot(e, e) - 2 * dot(e, c) + dot(c, c), 6)
+    d = emb.crossJoin(cents).select("vec_id", "c_id", *carry, dist2.alias("dist2"))
+    return top_k(d, "vec_id", ["dist2", "c_id"], 1)
 
 
 @q(
@@ -50,10 +62,10 @@ def emb_knn_cosine(spark, sf_dir):
     # the per-corpus-row cosine folds the query vector once, not three
     # times (bit-identical value — same ops, same order)
     qv = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe"), _norm(F.col("embedding")).alias("qn")
+        F.col("embedding").alias("qe"), norm(F.col("embedding")).alias("qn")
     )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (
-        _norm(F.col("embedding")) * F.col("qn")
+    cos = dot(F.col("embedding"), F.col("qe")) / (
+        norm(F.col("embedding")) * F.col("qn")
     )
     return (
         emb.filter(F.col("vec_id") != 0)
@@ -76,7 +88,7 @@ def emb_knn_cosine(spark, sf_dir):
 )
 def emb_norms(spark, sf_dir):
     return tbl(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.round(_norm(F.col("embedding")), 6).alias("l2_norm")
+        "vec_id", "label", F.round(norm(F.col("embedding")), 6).alias("l2_norm")
     )
 
 
@@ -149,20 +161,8 @@ def emb_cluster_assign(spark, sf_dir):
     shape); per-vector work is K dot products, and the only shuffles are
     the per-vector argmin window and the cluster-stats aggregation."""
     emb = tbl(spark, sf_dir, "embeddings")
-    cents = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
-        )
-    )
-    e, c = F.col("embedding"), F.col("cv")
-    dist2 = F.round(_dot(e, e) - 2 * _dot(e, c) + _dot(c, c), 6)
-    d = emb.crossJoin(cents).select("vec_id", "c_id", dist2.alias("dist2"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy("dist2", "c_id")
     return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        nearest_centroid(emb, first_centroids(emb))
         .groupBy(F.col("c_id").alias("cluster_id"))
         .agg(
             F.count("*").alias("n_members"),

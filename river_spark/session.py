@@ -67,16 +67,3 @@ TABLES = (
     "embeddings",
 )
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict:
-    """Load the driver's parquet tables and register them as temp views.
-
-    Views let every query be written either via the DataFrame API or
-    ``spark.sql`` against the same names DuckDB pre-registers.
-    """
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

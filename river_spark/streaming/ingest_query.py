@@ -133,7 +133,13 @@ def _parquet_dictionary_rule(spark: SparkSession, head: pa.Table):
     still sees them. Without them a task's writer holds a dictionary of
     every distinct value of such a column until the writer falls back to
     plain encoding: tens of MB of JVM heap per task, which outlive young
-    collections and are promoted."""
+    collections and are promoted.
+
+    The session is the only place the setting takes effect, so the lock
+    stays. On Spark 4.1.2 a file sink's
+    ``writeStream.option("parquet.enable.dictionary#x", "false")`` still
+    wrote ``x`` as ``PLAIN_DICTIONARY``, while the same key set on the
+    session wrote it ``PLAIN``."""
     keys = [f"parquet.enable.dictionary#{name}" for name in sorted(plain_columns(head))]
     with _SESSION_CONF_LOCK:
         saved = {k: spark.conf.get(k, None) for k in keys}

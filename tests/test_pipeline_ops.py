@@ -109,6 +109,18 @@ def test_lsh_topk_recall_vs_brute_force(vectors):
     assert top_exact.doc_id == 100
     top_approx = approx.filter(F.col("query_id") == 0).orderBy(F.desc("cos_sim")).first()
     assert top_approx.doc_id == 100
+    # top-k edges: docs 1, 2 and 3 all score cosine 1.0 against query 0,
+    # so k=2 cuts inside the tie and doc_id breaks it; a k past the
+    # group's size returns the whole group
+    tie = vectors.sparkSession.createDataFrame(
+        [(0, [1.0, 0.0]), (3, [1.0, 0.0]), (1, [3.0, 0.0]), (2, [2.0, 0.0]), (4, [0.0, 1.0])],
+        ["vec_id", "embedding"],
+    )
+    q0 = tie.filter(F.col("vec_id") == 0)
+    cut = brute_force_topk(tie, q0, "vec_id", "embedding", k=2).collect()
+    assert sorted((r.doc_id, r.cos_sim) for r in cut) == [(1, 1.0), (2, 1.0)]
+    whole = brute_force_topk(tie, q0, "vec_id", "embedding", k=10).collect()
+    assert sorted(r.doc_id for r in whole) == [1, 2, 3, 4]
 
 
 def test_asof_directions(spark):

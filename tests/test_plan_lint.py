@@ -16,10 +16,14 @@ min-side bound. Hinted equi-join builds are gated separately by
 tests/test_broadcast_discipline.py (two-SF growth check)."""
 
 import os
+import re
 
 import pytest
+from pyspark.sql import functions as F
 
+from river_spark.operators.similarity import brute_force_topk
 from river_spark.queries import QUERIES
+from river_spark.queries.tables import tbl
 from river_spark.testing.planwalk import (
     broadcast_join_builds,
     cartesian_min_side,
@@ -150,3 +154,40 @@ def test_no_scale_antipatterns(name, spark):
                 )
     # row-at-a-time Python UDFs never allowed; Arrow-batched ones are fine
     assert "BatchEvalPython" not in plan, f"{name}: non-Arrow Python UDF in plan"
+
+
+# The per-pair cosine fold of the similarity operators (dot("cv", "qv")).
+_COSINE_FOLD = re.compile(r"zip_with\(cv#\d+, qv#\d+")
+
+
+def _brute_force_plan(spark):
+    emb = tbl(spark, SF_DIR, "embeddings")
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding", k=10)
+
+
+VECTOR_TOPK = {
+    "emb_ann_lsh": lambda spark: QUERIES["emb_ann_lsh"].fn(spark, SF_DIR),
+    "emb_ann_ivf": lambda spark: QUERIES["emb_ann_ivf"].fn(spark, SF_DIR),
+    "brute_force_topk": _brute_force_plan,
+}
+
+
+@pytest.mark.parametrize("name", sorted(VECTOR_TOPK))
+def test_vector_topk_scores_narrow_then_ranks(name, spark):
+    """Score narrow, then rank: in the executed plan the cosine fold is
+    evaluated once per candidate pair (a window ordered by the raw
+    expression while the output rounds it computes the fold twice), and
+    no array column is input to a Window, WindowGroupLimit or Sort —
+    vectors riding the ranking sort cost memory and spill at scale."""
+    df = VECTOR_TOPK[name](spark)
+    df.collect()
+    nodes = list(walk(final_plan(df)))
+    folds = sum(len(_COSINE_FOLD.findall(n.simpleString(10_000))) for n in nodes)
+    assert folds == 1, f"{name}: cosine fold evaluated {folds} times"
+    for n in nodes:
+        if n.nodeName() not in ("Window", "WindowGroupLimit", "Sort"):
+            continue
+        out = n.child().output()
+        attrs = [out.apply(i) for i in range(out.size())]
+        arrays = [a.toString() for a in attrs if a.dataType().typeName() == "array"]
+        assert not arrays, f"{name}: {n.nodeName()} input carries arrays {arrays}"
