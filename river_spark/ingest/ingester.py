@@ -12,12 +12,18 @@ Parity with ``cpp/ingester/src/ingester.cpp``:
   write ``data_{idx:010d}.parquet`` via temp+rename (``ingest/parquet.py``:
   Snappy, dictionary encoding only where it pays). The ``StreamReader``
   decodes each stored batch once across the ``samples_per_read`` reads
-  that slice it.
+  that slice it. Each read returns an owned copy of its samples; a row
+  group is assembled from the reads' chunks by ``concat_samples``, which
+  copies fixed-width rows as opaque ``itemsize``-byte records (no
+  per-chunk, per-field dtype promotion) and joins variable-width chunks
+  as bytes. Keys and byte columns are built column-wise, so no Python
+  runs per sample.
 - Resume (``ingester.cpp:649-711``): read the last ``data_*.parquet``,
   restart after its last key; never overwrite existing files.
 - Compaction on EOF (``ingester.cpp:555-647``): concatenate all parts into
-  a single ``data.parquet``, delete parts; refuse if the target exists. A
-  lone part is renamed to ``data.parquet``, not read back and rewritten.
+  a single ``data.parquet`` (streamed part by part, so peak memory is one
+  part), delete parts; refuse if the target exists. A lone part is
+  renamed to ``data.parquet``, not read back and rewritten.
   NOTE: single-file compaction is the reference's laptop-scale behavior —
   at 100 TB the Spark path keeps size-tiered part files instead.
 - Retention (``ingester.cpp:424-490``): after persisting, delete wholly
@@ -44,8 +50,8 @@ from river_spark.ingest.layout import data_parts
 from river_spark.ingest.parquet import write_parquet
 from river_spark.ingest.settings import IngesterSettings, StreamIngestionSettings
 from river_spark.schema import FieldType, StreamSchema
-from river_spark.transport.log import StreamLog, is_reserved_stream, run_keys
-from river_spark.transport.reader import StreamReader
+from river_spark.transport.log import StreamLog, is_reserved_stream, key_array, run_columns
+from river_spark.transport.reader import StreamReader, concat_samples
 
 _ARROW_TYPES = {
     FieldType.DOUBLE: pa.float64(),
@@ -93,26 +99,36 @@ def arrow_batch(
 ) -> pa.RecordBatch:
     """Decoded log samples → one Arrow batch of ``arrow_schema`` columns
     (ingester.cpp:296-390). ``key_runs`` ``[(count, key_ms, key_seq0)]``
-    cover the samples in order: keys are rebuilt from them, and each
-    sample's ``timestamp_ms`` is its run's ms (cpp/src/redis.h:66-70)."""
-    ts = np.repeat(
-        np.array([ms for _n, ms, _seq0 in key_runs], dtype=np.int64),
-        [n for n, _ms, _seq0 in key_runs],
-    )
+    cover the samples in order: keys are rebuilt from them column-wise
+    (``key_array``), and each sample's ``timestamp_ms`` is its run's ms
+    (cpp/src/redis.h:66-70). Byte columns are built over the sample bytes
+    with ``from_buffers``, not value by value."""
+    ms, seq = run_columns(key_runs)
     arrays = [
         pa.array(indices, pa.int64()),
-        pa.array(run_keys(key_runs), pa.string()),
-        pa.array(ts, pa.int64()),
+        key_array(ms, seq),
+        pa.array(ms, pa.int64()),
     ]
     for f in schema.field_definitions:
         if fields is not None and f.name not in fields:
             continue  # column pruning at ingest (A18)
         if f.type is FieldType.VARIABLE_WIDTH_BYTES:
-            offs = np.concatenate([[0], np.cumsum(sizes)])
-            buf = samples.tobytes()
-            arrays.append(pa.array([buf[offs[i] : offs[i + 1]] for i in range(len(sizes))], pa.binary()))
+            # int64 offsets, then a checked cast to ``binary``'s int32
+            # offsets: a column past 2 GiB raises instead of wrapping
+            offsets = np.zeros(len(sizes) + 1, dtype=np.int64)
+            np.cumsum(sizes, out=offsets[1:])
+            values = np.ascontiguousarray(samples)
+            large = pa.LargeBinaryArray.from_buffers(
+                pa.large_binary(), len(sizes), [None, pa.py_buffer(offsets), pa.py_buffer(values)]
+            )
+            arrays.append(large.cast(pa.binary()))
         elif f.type is FieldType.FIXED_WIDTH_BYTES:
-            arrays.append(pa.array([bytes(v) for v in samples[f.name]], pa.binary(f.size)))
+            values = np.ascontiguousarray(samples[f.name]).view(np.uint8)
+            arrays.append(
+                pa.FixedSizeBinaryArray.from_buffers(
+                    pa.binary(f.size), len(samples), [None, pa.py_buffer(values)]
+                )
+            )
         else:
             arrays.append(pa.array(samples[f.name], _ARROW_TYPES[f.type]))
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema(schema, fields))
@@ -210,7 +226,7 @@ class SingleStreamIngester:
             if got:
                 batch = arrow_batch(
                     schema,
-                    np.concatenate(raws),
+                    concat_samples(schema, raws),
                     np.concatenate(sizes) if sizes else None,
                     np.concatenate(indices),
                     runs,
@@ -266,7 +282,8 @@ class SingleStreamIngester:
                 # a lone part already is the combined file: rename it
                 os.replace(paths[0], final)
             else:
-                write_parquet(final, [pa.concat_tables([pq.read_table(p) for p in paths])])
+                # one part in memory at a time
+                write_parquet(final, (pq.read_table(p) for p in paths))
                 for p in paths:
                     os.remove(p)
         write_output_metadata(self.log, self.stream_name, self.out_dir, self.settings)

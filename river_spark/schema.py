@@ -102,7 +102,17 @@ class StreamSchema:
         # (cpp/src/writer.cpp:62-64, doc cpp/src/schema.h:19-22).
         if has_var and len(field_definitions) != 1:
             raise SchemaError("a VARIABLE_WIDTH_BYTES field must be the stream's only field")
+        # A schema is fixed for its lifetime (nothing mutates
+        # ``field_definitions``), so the facts every read and batch ask
+        # for are computed once here, not per call.
         self.field_definitions = list(field_definitions)
+        self._has_var = has_var
+        self._dtype = np.dtype(
+            [
+                (f.name, _NUMPY_DTYPES.get(f.type, np.dtype((np.void, f.size))))
+                for f in field_definitions
+            ]
+        )
 
     # -- core properties ---------------------------------------------------
     def sample_size(self) -> int:
@@ -112,7 +122,7 @@ class StreamSchema:
 
     @property
     def has_variable_width_field(self) -> bool:
-        return any(f.type is FieldType.VARIABLE_WIDTH_BYTES for f in self.field_definitions)
+        return self._has_var
 
     def field_names(self) -> list[str]:
         return [f.name for f in self.field_definitions]
@@ -151,13 +161,7 @@ class StreamSchema:
 
     # -- NumPy structured dtype round trip (python/river.pyx:162-226) -------
     def dtype(self) -> np.dtype:
-        parts = []
-        for f in self.field_definitions:
-            if f.type in _NUMPY_DTYPES:
-                parts.append((f.name, _NUMPY_DTYPES[f.type]))
-            else:
-                parts.append((f.name, np.dtype((np.void, f.size))))
-        return np.dtype(parts)
+        return self._dtype
 
     @classmethod
     def from_dtype(cls, dtype: np.dtype) -> StreamSchema:

@@ -63,7 +63,7 @@ from river_spark.ingest.ingester import _ARROW_TYPES, arrow_batch
 from river_spark.schema import StreamSchema
 from river_spark.transport.compression import Compressor
 from river_spark.transport.log import FileBackend, StreamLog
-from river_spark.transport.reader import decode_batch
+from river_spark.transport.reader import concat_samples, decode_batch
 from river_spark.transport.writer import (
     DEFAULT_BATCH_SIZE,
     DEFAULT_ENTRIES_PER_SEGMENT,
@@ -411,13 +411,13 @@ def _struct_chunks(schema: StreamSchema, iterator, batch_size: int):
         pending.append(_arrow_to_struct(schema, batch))
         pending_rows += pending[-1].shape[0]
         while pending_rows >= batch_size:
-            arr = pending[0] if len(pending) == 1 else np.concatenate(pending)
+            arr = pending[0] if len(pending) == 1 else concat_samples(schema, pending)
             yield np.ascontiguousarray(arr[:batch_size])
             rest = arr[batch_size:]
             pending = [rest] if rest.shape[0] else []
             pending_rows = rest.shape[0]
     if pending_rows:
-        arr = pending[0] if len(pending) == 1 else np.concatenate(pending)
+        arr = pending[0] if len(pending) == 1 else concat_samples(schema, pending)
         yield np.ascontiguousarray(arr)
 
 

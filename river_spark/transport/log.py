@@ -40,6 +40,8 @@ import threading
 import time
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from river_spark.transport.backend import (  # noqa: F401  (re-exported)
     MemoryBackend,
@@ -87,14 +89,31 @@ def open_log_root(log_root: str) -> "StreamLog":
     return StreamLog(value)
 
 
-def encode_key(ms: int, seq: int) -> str:
-    return f"{ms}-{seq}"
+def run_columns(key_runs: list[tuple[int, int, int]]) -> tuple[np.ndarray, np.ndarray]:
+    """Per-sample ``(ms, seq)`` int64 columns of consecutive key runs
+    ``[(count, key_ms, key_seq0)]``; a batch's keys are one run
+    (ms, seq0..seq0+count-1)."""
+    runs = np.array(key_runs, dtype=np.int64).reshape(-1, 3)
+    counts = runs[:, 0]
+    ms = np.repeat(runs[:, 1], counts)
+    # seq0 of each sample's run plus the sample's offset inside the run
+    run_starts = np.repeat(np.cumsum(counts) - counts, counts)
+    seq = np.repeat(runs[:, 2], counts) + (np.arange(len(ms), dtype=np.int64) - run_starts)
+    return ms, seq
+
+
+def key_array(ms: np.ndarray, seq: np.ndarray) -> pa.StringArray:
+    """The ``"<ms>-<seq>"`` keys of ``run_columns``' output as one Arrow
+    string column, formatted column-wise (no per-sample Python): the one
+    definition of key formatting."""
+    return pc.binary_join_element_wise(
+        pc.cast(pa.array(ms), pa.string()), pc.cast(pa.array(seq), pa.string()), "-"
+    )
 
 
 def run_keys(key_runs: list[tuple[int, int, int]]) -> list[str]:
-    """Keys of consecutive key runs ``[(count, key_ms, key_seq0)]``; a
-    batch's keys are one run (ms, seq0..seq0+count-1)."""
-    return [encode_key(ms, seq0 + i) for n, ms, seq0 in key_runs for i in range(n)]
+    """Keys of consecutive key runs, as Python strings."""
+    return key_array(*run_columns(key_runs)).to_pylist()
 
 
 def decode_key(key: str) -> tuple[int, int]:

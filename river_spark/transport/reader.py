@@ -14,7 +14,11 @@ Parity with ``cpp/src/reader.cpp``:
   from it, so a run of ``samples_per_read``-sized reads reads and
   decompresses each stored batch once. The held batch is dropped once a
   read passes its end, and is keyed by its handle, so after a ``seek``,
-  ``tail`` or segment hop a read never slices a batch it left.
+  ``tail`` or segment hop a read never slices a batch it left. A read
+  finds its batches by bisecting the cached segment listing from the
+  cursor, so it touches only the batches it returns. It returns an owned
+  copy of its samples (``concat_samples``), never a view of the held
+  batch.
 - ``tail``: skips to the newest sample after the cursor, reporting how many
   were skipped; -1 on EOF-and-drained (``cpp/src/reader.cpp:336-488``).
 - ``seek``: moves the cursor to the greatest element ≤ key — never backward;
@@ -23,11 +27,14 @@ Parity with ``cpp/src/reader.cpp``:
 
 ``decode_batch`` is the one decoder of a stored batch (decompress, then
 slice with ``slice_batch``); the Spark DataSource and the sink's boundary
-split call it too.
+split call it too. ``concat_samples`` is the one concatenation of decoded
+samples: the reader, the ingester's row groups and the DataSource's write
+chunks use it.
 """
 
 from __future__ import annotations
 
+import bisect
 import time
 from dataclasses import dataclass, field
 
@@ -82,6 +89,23 @@ def decode_batch(
     return data.view(schema.dtype())[lo:hi], None
 
 
+def concat_samples(schema: StreamSchema, chunks: list[np.ndarray]) -> np.ndarray:
+    """Concatenate decoded sample chunks into one new array that owns its
+    data. Variable-width chunks are flat bytes. Fixed-width chunks are
+    structured arrays of ``schema.dtype()``; their rows are copied as
+    opaque ``itemsize``-byte records, because concatenating structured
+    arrays makes NumPy promote every field of every chunk, a Python-level
+    cost per chunk and field."""
+    if schema.has_variable_width_field:
+        return np.concatenate(chunks) if chunks else np.empty(0, dtype=np.uint8)
+    dtype = schema.dtype()
+    out = np.empty(sum(len(c) for c in chunks), dtype=dtype)
+    if chunks:
+        row = np.dtype((np.void, dtype.itemsize))
+        np.concatenate([c.view(row) for c in chunks], out=out.view(row))
+    return out
+
+
 def slice_batch(
     samples: np.ndarray, sizes: np.ndarray | None, lo: int = 0, hi: int | None = None
 ) -> tuple[np.ndarray, np.ndarray | None]:
@@ -108,6 +132,8 @@ class StreamReader:
         self._listeners = []
         # (handle, samples, sizes): the decoded batch the cursor is inside
         self._held: tuple[str, np.ndarray, np.ndarray | None] | None = None
+        # (segment, sorted listing): the segment's batches, listed once
+        self._batch_cache: tuple[int, list] | None = None
         self.total_samples_read = 0
         self.initialized_at_us: int | None = None
 
@@ -169,17 +195,25 @@ class StreamReader:
         wait(self.stream_name, self._segment, timeout_ms=ms)
 
     # -- scan helpers ----------------------------------------------------------
-    def _available_in_segment(self) -> list[tuple[int, int, int, int, str]]:
-        # cache the directory listing; refresh only when it has nothing new
-        # (an O(files) listing per read call would be quadratic overall)
-        cache = getattr(self, "_batch_cache", None)
-        if cache is not None and cache[0] == self._segment:
-            avail = [b for b in cache[1] if b[0] + b[1] > self._next_index]
-            if avail:
-                return avail
-        batches = self.log.list_batches(self.stream_name, self._segment)
-        self._batch_cache = (self._segment, batches)
-        return [b for b in batches if b[0] + b[1] > self._next_index]
+    def _available_in_segment(self):
+        """Yield the batches of the cursor's segment that end past the
+        cursor, in order. The segment's listing is cached and refreshed
+        only when it has nothing past the cursor (an O(files) listing per
+        read would be quadratic overall); the first batch is found by
+        bisecting the sorted listing on batch end, so a read touches only
+        the batches it returns."""
+        def past_cursor(batches):
+            return bisect.bisect_right(batches, self._next_index, key=lambda b: b[0] + b[1])
+
+        cache = self._batch_cache
+        first = past_cursor(cache[1]) if cache is not None and cache[0] == self._segment else None
+        if first is None or first == len(cache[1]):
+            listing = self.log.list_batches(self.stream_name, self._segment)
+            cache = self._batch_cache = (self._segment, listing)
+            first = past_cursor(listing)
+        batches = cache[1]
+        for i in range(first, len(batches)):
+            yield batches[i]
 
     def _decoded(self, handle: str) -> tuple[np.ndarray, np.ndarray | None]:
         """The whole decoded batch at ``handle``, decoded once while the
@@ -215,7 +249,9 @@ class StreamReader:
         """Read ≤ num_samples. ``with_keys`` materializes per-sample key
         strings (optional out-param, like the reference's ``keys`` pointer,
         cpp/src/reader.h:150) — skipping them keeps the hot path free of
-        per-row Python string formatting."""
+        per-row Python string formatting. ``samples`` is a new array that
+        owns its data (``concat_samples``), so a caller may keep or modify
+        it without touching the held batch or the log."""
         n = min(num_samples, self.max_fetch_size)
         deadline = None if timeout_ms < 0 else time.monotonic() + timeout_ms / 1000
         chunks: list[np.ndarray] = []
@@ -259,11 +295,10 @@ class StreamReader:
         indices = np.arange(self._next_index - got, self._next_index, dtype=np.int64)
         self.total_samples_read += got
         keys = run_keys(runs) if with_keys else []
+        samples = concat_samples(self.schema, chunks)
         if self.schema.has_variable_width_field:
-            samples = np.concatenate(chunks) if chunks else np.empty(0, dtype=np.uint8)
             sizes = np.concatenate(sizes_out) if sizes_out else np.empty(0, dtype=np.int64)
             return ReadResult(got, samples, keys, indices, sizes, runs)
-        samples = np.concatenate(chunks) if chunks else np.empty(0, dtype=self.schema.dtype())
         return ReadResult(got, samples, keys, indices, key_runs=runs)
 
     # -- tail ---------------------------------------------------------------------

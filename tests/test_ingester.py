@@ -334,3 +334,62 @@ def test_write_parquet_failed_write_leaves_no_temp(tmp_path):
     with pytest.raises(ValueError):
         write_parquet(target, iter([bad]), schema=schema)
     assert os.listdir(tmp_path) == []
+
+
+def test_arrow_batch_keys_equal_run_keys():
+    """``arrow_batch`` keys and timestamps follow the key runs: seq0 > 0,
+    two runs in the same ms, a 1-sample run, and an empty batch."""
+    from river_spark.ingest.ingester import arrow_batch
+    from river_spark.transport.log import run_keys
+
+    schema = StreamSchema([FieldDefinition("v", FieldType.DOUBLE)])
+    for runs in ([(3, 1700000000123, 5), (2, 1700000000123, 8), (1, 1700000000124, 0), (4, 1700000000200, 17)], []):
+        n = sum(c for c, _ms, _seq0 in runs)
+        samples = np.zeros(n, dtype=schema.dtype())
+        batch = arrow_batch(schema, samples, None, np.arange(n), runs)
+        expected = [f"{ms}-{seq0 + i}" for c, ms, seq0 in runs for i in range(c)]
+        assert batch.column(1).to_pylist() == run_keys(runs) == expected
+        assert batch.column(2).to_pylist() == [ms for c, ms, _seq0 in runs for _ in range(c)]
+
+
+@pytest.mark.parametrize("kind", ["fixed", "variable"])
+def test_multi_part_ingest_matches_written_samples(log, out, kind):
+    """With row groups small enough to give several parts, the ingested
+    Parquet holds exactly the written values and the keys the stored
+    batches carry."""
+    import pyarrow as pa
+
+    n = 500
+    if kind == "fixed":
+        schema = StreamSchema(
+            [FieldDefinition("d", FieldType.DOUBLE), FieldDefinition("b", FieldType.FIXED_WIDTH_BYTES, size=4)]
+        )
+        arr = np.zeros(n, dtype=schema.dtype())
+        arr["d"] = np.cos(np.arange(n))
+        arr["b"] = [i.to_bytes(4, "little") for i in range(n)]
+        w = StreamWriter(log, batch_size=16, entries_per_segment=120).initialize("parts", schema)
+        w.write(arr)
+        columns = {"d": pa.array(arr["d"]), "b": pa.array([bytes(v) for v in arr["b"]], pa.binary(4))}
+    else:
+        schema = StreamSchema([FieldDefinition("v", FieldType.VARIABLE_WIDTH_BYTES, size=8)])
+        payloads = [bytes([i % 251]) * (i % 9) for i in range(n)]  # every ninth empty
+        w = StreamWriter(log, batch_size=16, entries_per_segment=120).initialize("parts", schema)
+        w.write(np.frombuffer(b"".join(payloads), np.uint8), sizes=np.array([len(p) for p in payloads]))
+        columns = {"v": pa.array(payloads, pa.binary())}
+    w.stop()
+    runs = [(c, ms, seq0) for seg in log.list_segments("parts") for _s, c, ms, seq0, _h in log.list_batches("parts", seg)]
+    expected = pa.table(
+        {
+            "sample_index": pa.array(np.arange(n)),
+            "key": [f"{ms}-{seq0 + i}" for c, ms, seq0 in runs for i in range(c)],
+            "timestamp_ms": pa.array([ms for c, ms, _seq0 in runs for _ in range(c)], pa.int64()),
+            **columns,
+        }
+    )
+
+    s = default_settings(bytes_per_row_group=100 * schema.sample_size())
+    assert SingleStreamIngester(log, out, "parts", s).ingest() is IngestResult.COMPLETED
+    t = pq.read_table(os.path.join(out, "parts", "data.parquet"))
+    assert t.num_rows == n
+    for name in expected.column_names:
+        assert t.column(name).to_pylist() == expected.column(name).to_pylist(), name

@@ -408,3 +408,47 @@ def test_held_batch_never_goes_stale(log, kind):
     skipped, res = r2.tail(timeout_ms=50)
     assert skipped == 999 - 776
     expect(res, 999)
+
+
+# -- reads return owned copies, bit-equal at every read size ---------------------
+@pytest.mark.parametrize("read_size", [1, 32, 1536, 5000])
+@pytest.mark.parametrize("compressed", [True, False], ids=["zlib", "uncompressed"])
+def test_reads_of_any_size_return_owned_samples(log, compressed, read_size):
+    """Over several stored batches and segments, reads of ``read_size``
+    return exactly the written samples; each returned array is writable
+    and owns its data, so mutating it leaves what a second reader gets
+    unchanged."""
+    from river_spark.transport.compression import CompressionMode, Compressor
+
+    schema = StreamSchema(
+        [
+            FieldDefinition("i", FieldType.INT64),
+            FieldDefinition("v", FieldType.DOUBLE),
+            FieldDefinition("b", FieldType.FIXED_WIDTH_BYTES, size=3),
+        ]
+    )
+    n = 6000
+    arr = make_samples(schema, n)
+    arr["v"] = np.sin(np.arange(n))
+    arr["b"] = [bytes([i % 256, (i * 7) % 256, 0]) for i in range(n)]
+    mode = CompressionMode.ZLIB_LOSSLESS if compressed else CompressionMode.UNCOMPRESSED
+    w = StreamWriter(log, batch_size=700, entries_per_segment=2100, compression=Compressor(mode))
+    w.initialize("own", schema)
+    w.write(arr)
+    w.stop()
+    assert len(log.list_segments("own")) > 1
+
+    r = StreamReader(log).initialize("own")
+    got = []
+    while True:
+        res = r.read(read_size, timeout_ms=50)
+        if res.eof:
+            break
+        assert res.samples.dtype == schema.dtype()
+        assert res.samples.flags.owndata and res.samples.flags.writeable
+        got.append(res.samples.copy())
+        res.samples["i"] = -1  # must not reach the reader's held batch or the log
+        res.samples["b"] = b"\xff\xff\xff"
+    assert np.concatenate(got).tobytes() == arr.tobytes()
+    again = StreamReader(log).initialize("own").read(n, timeout_ms=50)
+    assert again.samples.tobytes() == arr.tobytes()
